@@ -1,4 +1,4 @@
-"""Geometry encoding & serialization (SURVEY.md §1.3, §4.2).
+"""Geometry encoding (SURVEY.md §1.3, §4.2).
 
 Spark has no native geometry type and no third-party extension is
 assumed; the engine's vector-geometry encoding is:
@@ -8,10 +8,6 @@ assumed; the engine's vector-geometry encoding is:
 
 (coordinate order [lng, lat] matching GeoJSON, which is what the
 reference consumes — `/root/reference/update_ways_metadata.py:25-28`.)
-
-Serializers below are the engine's `ST_AsGeoJSON` / GeoJSON-parse
-analogs (reference P2/P3: `st_asgeojson(the_geom)` +
-`json.loads(geojson)['coordinates']`) — pure column expressions.
 """
 
 from __future__ import annotations
@@ -28,46 +24,6 @@ LINESTRING_TYPE = ArrayType(POINT_TYPE)
 
 def point(lng: Column, lat: Column) -> Column:
     return F.struct(lng.cast("double").alias("lng"), lat.cast("double").alias("lat"))
-
-
-def _fmt_num(c: Column) -> Column:
-    # GeoJSON numbers without trailing ".0" for integral values — match
-    # the compact form `json.dumps`/PostGIS emit. Uses repr-shortest
-    # via cast to string of double.
-    return c.cast("string")
-
-
-def linestring_to_geojson(geom: Column | str) -> Column:
-    """array<struct<lng,lat>> → '{"type":"LineString","coordinates":[[x,y],…]}'"""
-    g = F.col(geom) if isinstance(geom, str) else geom
-    coords = F.concat_ws(
-        ",",
-        F.transform(
-            g,
-            lambda p: F.concat(
-                F.lit("["), _fmt_num(p["lng"]), F.lit(","), _fmt_num(p["lat"]), F.lit("]")
-            ),
-        ),
-    )
-    return F.concat(F.lit('{"type":"LineString","coordinates":['), coords, F.lit("]}"))
-
-
-def geojson_to_linestring(geojson: Column | str) -> Column:
-    """GeoJSON LineString text → array<struct<lng,lat>> (reference P3)."""
-    j = F.col(geojson) if isinstance(geojson, str) else geojson
-    pairs = F.from_json(
-        F.get_json_object(j, "$.coordinates"), ArrayType(ArrayType(DoubleType()))
-    )
-    return F.transform(pairs, lambda xy: F.struct(xy[0].alias("lng"), xy[1].alias("lat")))
-
-
-def linestring_to_wkt(geom: Column | str) -> Column:
-    g = F.col(geom) if isinstance(geom, str) else geom
-    coords = F.concat_ws(
-        ",",
-        F.transform(g, lambda p: F.concat(_fmt_num(p["lng"]), F.lit(" "), _fmt_num(p["lat"]))),
-    )
-    return F.concat(F.lit("LINESTRING("), coords, F.lit(")"))
 
 
 def is_closed_ring(refs: Column | str, min_refs: int = 4) -> Column:

@@ -55,25 +55,6 @@ def stopword_ratio(text: Column | str, stopwords: list[str] | None = None) -> Co
     return n_stop.cast("double") / F.size(toks)
 
 
-def punct_ratio(text: Column | str) -> Column:
-    t = F.col(text) if isinstance(text, str) else text
-    n_punct = F.length(F.regexp_replace(t, r"[^\.,;:!\?'\"()\[\]{}-]", ""))
-    return n_punct.cast("double") / F.greatest(F.length(t), F.lit(1)).cast("double")
-
-
-def quality_score(text: Column | str) -> Column:
-    """Composite [0,1] quality heuristic: length sweet-spot, word-length
-    sanity, low punctuation density. Mirrors the shape of C4/Gopher-style
-    rule filters (public heuristics), not any specific implementation."""
-    t = F.col(text) if isinstance(text, str) else text
-    n = token_count(t)
-    len_score = F.least(n.cast("double") / 50.0, F.lit(1.0))
-    awl = avg_word_length(t)
-    wl_score = F.when((awl >= 3.0) & (awl <= 10.0), 1.0).otherwise(0.5)
-    p_score = F.lit(1.0) - F.least(punct_ratio(t) * 5.0, F.lit(1.0))
-    return (len_score + wl_score + p_score) / 3.0
-
-
 def _bind(value: Column, body) -> Column:
     """Evaluate ``value`` ONCE per row and pass it to ``body`` as a
     bound lambda variable: transform(array(v), x -> body(x))[1].
@@ -122,15 +103,6 @@ def hashed_word_shingles(text: Column | str, n: int = 3) -> Column:
 
     hashed = _bind(tokens(text), lambda toks: F.transform(toks, lambda t: F.xxhash64(t)))
     return F.array_distinct(_bind(hashed, grams))
-
-
-def char_ngrams(text: Column | str, n: int = 3) -> Column:
-    t = F.col(text) if isinstance(text, str) else text
-    k = F.length(t) - (n - 1)
-    idx = F.sequence(F.lit(1), F.greatest(k, F.lit(1)))
-    grams = F.when(k >= 1, F.transform(idx, lambda i: F.substring(t, i, F.lit(n))))\
-        .otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(grams)
 
 
 def fingerprint_md5(text: Column | str) -> Column:
@@ -224,7 +196,7 @@ def lang_scores(text: Column | str) -> Column:
         return F.create_map(*entries)
 
     # coalesce('') mirrors the bigram form's NULL behavior: a NULL text
-    # had an EMPTY gram array (char_ngrams' when() falls to otherwise),
+    # had an EMPTY gram array (its when() fell through to otherwise),
     # i.e. all-zero scores, not NULL scores.
     return _bind(F.coalesce(lo, F.lit("")), body)
 

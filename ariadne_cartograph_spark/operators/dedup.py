@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint_md5, hashed_word_shingles
+from . import probe_memo
 
 # Persisted shingle frames created by the near-dup builders below. The
 # returned DataFrames are lazy, so the builders cannot unpersist before
@@ -35,28 +36,12 @@ _LIVE_CACHES: list[DataFrame] = []
 
 
 def _track_persist(df: DataFrame) -> DataFrame:
-    import os
-
     from pyspark import StorageLevel
 
     # Shingle frames are hot but small relative to executor memory;
     # deserialized memory-only avoids paying disk-spill serialization
-    # for frames cheap to recompute. Overridable for profiling.
-    level_name = os.environ.get("SPARK_GRAFT_PERSIST_LEVEL", "MEMORY_ONLY")
-    if level_name == "NONE":
-        return df
-    level = getattr(StorageLevel, level_name, None)
-    if not isinstance(level, StorageLevel):
-        import warnings
-
-        warnings.warn(
-            f"SPARK_GRAFT_PERSIST_LEVEL={level_name!r} is not a pyspark "
-            "StorageLevel (e.g. MEMORY_ONLY, MEMORY_AND_DISK, DISK_ONLY, "
-            "or NONE to disable); falling back to MEMORY_ONLY",
-            stacklevel=2,
-        )
-        level = StorageLevel.MEMORY_ONLY
-    cached = df.persist(level)
+    # for frames cheap to recompute.
+    cached = df.persist(StorageLevel.MEMORY_ONLY)
     _LIVE_CACHES.append(cached)
     return cached
 
@@ -133,25 +118,6 @@ def _minhash_from_shingles(shingles: "F.Column", n_hashes: int) -> "F.Column":
         F.sequence(F.lit(0), F.lit(n_hashes - 1)),
         lambda i: F.array_min(F.transform(shingles, lambda h: F.xxhash64(i, h))),
     )
-
-
-def minhash_signature(
-    df: DataFrame, text_col: str, n_hashes: int = 32, shingle_size: int = 3
-) -> DataFrame:
-    """Append ``mh_sig``: array<long> MinHash signature of the doc's
-    word-shingle set. Row-local: shingles → n_hashes seeded xxhash64
-    min-reductions, all inside array expressions (no shuffle)."""
-    # Shingles are built directly as longs (hashed_word_shingles: token
-    # hashes combined per gram — no gram strings), so string hashing
-    # runs once per TOKEN total, not once per gram per hash function;
-    # the shingle array is let-bound to build once per row.
-    from ..functions.text import _bind
-
-    sig = _bind(
-        hashed_word_shingles(text_col, n=shingle_size),
-        lambda h1: _minhash_from_shingles(h1, n_hashes),
-    )
-    return df.withColumn("mh_sig", sig)
 
 
 def lsh_candidate_pairs(
@@ -618,8 +584,8 @@ def _ngram_rep_pairs(
     # routing frame's plan hash: a warm call (bench's min-of-3 loop,
     # the parity harness) routes with ZERO probe jobs, and on the
     # count route the frequency table is then never built at all.
-    skey = _plan_key(df, text_col, shingle_size)
-    stats = _SHINGLE_STATS_CACHE.get(skey) if skey is not None else None
+    skey = probe_memo.key("shingle_stats", df, text_col, shingle_size)
+    stats = probe_memo.get(skey)
     freq = None
     if stats is None:
         exploded = sh.select(F.col(id_col), "n_sh", F.explode("sh").alias("g"))
@@ -635,7 +601,7 @@ def _ngram_rep_pairs(
             F.sum(F.col("df_g") * F.col("df_g")).alias("sum_sq"),
         ).first()
         stats = ((row["max_df"] or 0), (row["total"] or 0), (row["sum_sq"] or 0))
-        _cache_put(_SHINGLE_STATS_CACHE, skey, stats)
+        probe_memo.put(skey, stats)
     max_df, total, sum_sq = stats
     if ngram_join_strategy(max_df, total, sum_sq) == "prefix":
         rep_pairs = ngram_jaccard_pairs_prefix(
@@ -918,35 +884,6 @@ def simhash_md5(df: DataFrame, text_col: str, out_col: str = "sim_bits") -> Data
 # 2.77→3.80 s from an unconditional collapse on a dup-free corpus).
 _COLLAPSE_MIN_DUP_RATIO = 0.02
 
-# Probe-statistics memos, same contract as similarity._PAIR_COUNT_CACHE
-# (the r11 verdict asked for that pattern here): the measured stats only
-# PICK between lossless physical plans — collapse vs no collapse, prefix
-# vs count join — so a cached (or in the worst case stale) entry can
-# never change results, only the plan shape. Keyed on the input plan's
-# semanticHash, so repeated calls on the same logical plan (bench's
-# min-of-3 loop, the parity harness, multi-stage pipelines reusing a
-# corpus) route with ZERO extra Spark jobs.
-_DUP_GATE_CACHE: dict[tuple, tuple[int, int]] = {}
-_SHINGLE_STATS_CACHE: dict[tuple, tuple[int, int, int]] = {}
-_STATS_CACHE_MAX = 256
-
-
-def _plan_key(df: DataFrame, *extra):
-    """semanticHash-based memo key; None when the plan refuses to hash
-    (then the probe job just runs)."""
-    try:
-        return (df.semanticHash(), *extra)
-    except Exception:
-        return None
-
-
-def _cache_put(cache: dict, key, value) -> None:
-    if key is None:
-        return
-    if len(cache) >= _STATS_CACHE_MAX:
-        cache.pop(next(iter(cache)))
-    cache[key] = value
-
 
 def _dup_gate_agg(df: DataFrame, text_col: str, suffix: str = ""):
     """The 1-row duplication-gate aggregate: (count, countDistinct) of
@@ -969,15 +906,9 @@ def _dup_gate_stats(
     combined Spark job (1-row aggregates crossJoined), so the
     two-sided decontamination join pays one probe, not two, and bench
     repeats pay none."""
-    out: list = [None] * len(frames)
-    misses: list[int] = []
-    for i, (df, text_col) in enumerate(frames):
-        key = _plan_key(df, text_col)
-        hit = _DUP_GATE_CACHE.get(key) if key is not None else None
-        if hit is not None:
-            out[i] = hit
-        else:
-            misses.append(i)
+    keys = [probe_memo.key("dup_gate", df, text_col) for df, text_col in frames]
+    out: list = [probe_memo.get(k) for k in keys]
+    misses = [i for i, hit in enumerate(out) if hit is None]
     if misses:
         probe = None
         for i in misses:
@@ -987,7 +918,7 @@ def _dup_gate_stats(
         for i in misses:
             stats = ((row[f"n_{i}"] or 0), (row[f"n_fp_{i}"] or 0))
             out[i] = stats
-            _cache_put(_DUP_GATE_CACHE, _plan_key(frames[i][0], frames[i][1]), stats)
+            probe_memo.put(keys[i], stats)
     return out
 
 
@@ -1466,7 +1397,7 @@ def chunk_exact_dedup(
     occurrence is kept, so boilerplate shared across pages disappears
     while unique prose survives. This corpus has no line structure, so
     the passage unit is the non-overlapping ``chunk_size``-token chunk
-    (same slicing formula as the chunking UDTF / plan, stride = size:
+    (same slicing formula as the text_chunking plan, stride = size:
     every token in exactly one chunk).
 
     Keeps, per distinct chunk fingerprint, the occurrence with the

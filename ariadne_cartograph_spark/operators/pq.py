@@ -145,18 +145,6 @@ def pq_encode(
     return out.drop("__books") if path == "broadcast" else out
 
 
-def pq_reconstruct(codes_col: Column | str, books: list[list[list[float]]]) -> Column:
-    """Approximate vector from PQ codes: concat of the selected
-    codewords (array<double>, length D) — literal-codebook lookup,
-    pure column math."""
-    c = F.col(codes_col) if isinstance(codes_col, str) else codes_col
-    parts = [
-        F.element_at(F.array(*[_lit_vec(cw) for cw in books[j]]), c[j] + 1)
-        for j in range(len(books))
-    ]
-    return F.flatten(F.array(*parts))
-
-
 def ivf_pq_topk(
     corpus: DataFrame,
     queries: DataFrame,

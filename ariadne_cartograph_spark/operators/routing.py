@@ -35,42 +35,16 @@ def edge_adjacency(
     edges: DataFrame,
     weight: Column | None = None,
     directed: bool = False,
-    edge_id: str | None = None,
 ) -> DataFrame:
-    """(u, v, w[, edge_id]) adjacency from the topology's edge table.
-    Undirected by default (osm2pgrouting emits cost + reverse_cost per
-    edge; the fixture's ways carry no oneway handling here — documented
-    simplification). Pass ``edge_id`` (e.g. ``"gid"``) to carry the
-    edge identifier for route reconstruction
-    (:func:`shortest_paths_tracked`)."""
+    """(u, v, w) adjacency from the topology's edge table. Undirected
+    by default (osm2pgrouting emits cost + reverse_cost per edge; the
+    fixture's ways carry no oneway handling here — documented
+    simplification)."""
     w = (weight if weight is not None else F.lit(1.0)).alias("w")
-    ids = [F.col(edge_id).alias("edge_id")] if edge_id else []
-    fwd = edges.select(
-        F.col("source").alias("u"), F.col("target").alias("v"), w, *ids
-    )
+    fwd = edges.select(F.col("source").alias("u"), F.col("target").alias("v"), w)
     if directed:
         return fwd
-    rev = edges.select(
-        F.col("target").alias("u"), F.col("source").alias("v"), w, *ids
-    )
-    return fwd.unionByName(rev)
-
-
-def cost_adjacency(edges: DataFrame) -> DataFrame:
-    """Directed (u, v, w) adjacency from :func:`topology.edge_costs`
-    output: forward arcs at ``cost_s``; backward arcs only where
-    ``reverse_cost_s >= 0`` (pgRouting's ``-1`` marks oneway edges as
-    non-traversable backwards). This is the real cost model the
-    reference's enrichment exists to feed — per-class travel time, not
-    unit hops."""
-    fwd = edges.select(
-        F.col("source").alias("u"), F.col("target").alias("v"),
-        F.col("cost_s").alias("w"),
-    )
-    rev = edges.filter(F.col("reverse_cost_s") >= 0).select(
-        F.col("target").alias("u"), F.col("source").alias("v"),
-        F.col("reverse_cost_s").alias("w"),
-    )
+    rev = edges.select(F.col("target").alias("u"), F.col("source").alias("v"), w)
     return fwd.unionByName(rev)
 
 
@@ -145,357 +119,6 @@ def shortest_path_matrix(
             "src", "node_id",
             F.col("s.dist").alias("dist"), F.col("s.hops").alias("hops"),
         )
-    )
-
-
-def shortest_paths_tracked(
-    adj: DataFrame,
-    source_vertices: list[int],
-    max_iter: int = 50,
-) -> DataFrame:
-    """Single/multi-source relaxation that RECORDS the argmin
-    predecessor — the state pgr_dijkstra needs to return actual routes,
-    not just costs. ``adj`` must carry (u, v, w, edge_id) (see
-    :func:`edge_adjacency`'s ``edge_id`` parameter).
-
-    Determinism: the per-node merge takes the lexicographic min of
-    (dist, hops, pred_node, pred_edge) — equal-cost paths resolve to
-    the smallest (hops, predecessor) tuple on every engine/partition
-    order, so recorded routes are reproducible.
-
-    Returns (node_id, dist, hops, pred_node, pred_edge); sources have
-    NULL predecessors and dist 0.
-    """
-    adj = adj.localCheckpoint(eager=True)  # persist the graph once
-    spark = adj.sparkSession
-    seed = spark.createDataFrame(
-        [(int(v), 0.0, 0, None, None) for v in source_vertices],
-        "node_id long, dist double, hops int, pred_node long, pred_edge long",
-    ).localCheckpoint(eager=True)
-    rounds = [seed]
-    frontier = seed
-
-    def dist_view() -> DataFrame:
-        out = rounds[0]
-        for r in rounds[1:]:
-            out = out.unionByName(r)
-        return out
-
-    for _ in range(max_iter):
-        cand = (
-            frontier.select(
-                F.col("node_id").alias("p_node"),
-                F.col("dist").alias("p_dist"),
-                F.col("hops").alias("p_hops"),
-            )
-            .join(adj, F.col("p_node") == adj["u"])
-            .select(
-                F.col("v").alias("node_id"),
-                (F.col("p_dist") + F.col("w")).alias("dist"),
-                (F.col("p_hops") + 1).alias("hops"),
-                F.col("p_node").alias("pred_node"),
-                F.col("edge_id").alias("pred_edge"),
-            )
-            .groupBy("node_id")
-            .agg(F.min(F.struct("dist", "hops", "pred_node", "pred_edge")).alias("s"))
-            .select(
-                "node_id",
-                F.col("s.dist").alias("dist"),
-                F.col("s.hops").alias("hops"),
-                F.col("s.pred_node").alias("pred_node"),
-                F.col("s.pred_edge").alias("pred_edge"),
-            )
-        )
-        best = dist_view().groupBy("node_id").agg(F.min("dist").alias("old"))
-        improved = (
-            cand.join(best, "node_id", "left")
-            .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
-            .select("node_id", "dist", "hops", "pred_node", "pred_edge")
-            .localCheckpoint(eager=True)
-        )
-        if improved.isEmpty():
-            break
-        rounds.append(improved)
-        frontier = improved
-    return (
-        dist_view()
-        .groupBy("node_id")
-        .agg(F.min(F.struct("dist", "hops", "pred_node", "pred_edge")).alias("s"))
-        .select(
-            "node_id",
-            F.col("s.dist").alias("dist"),
-            F.col("s.hops").alias("hops"),
-            F.col("s.pred_node").alias("pred_node"),
-            F.col("s.pred_edge").alias("pred_edge"),
-        )
-    )
-
-
-def reconstruct_paths(
-    tracked: DataFrame,
-    target_vertices: list[int],
-    max_iter: int = 200,
-) -> DataFrame:
-    """Predecessor table → pgr_dijkstra-shaped route rows for a SET of
-    targets at once: (target, seq, node_id, arrived_by_edge, agg_cost),
-    seq 0 at the source, arrived_by_edge NULL on the source row.
-
-    The backward walk runs ALL targets simultaneously — each round is
-    one broadcast join of the (≤ |targets|)-row cursor frame against
-    the tracked table, so rounds = longest path length, not
-    Σ path lengths, and targets is the parallel batch dimension (the
-    Spark-shaped form of a point query; a single OD lookup belongs in a
-    serving engine, a million of them belong here).
-    """
-    t = tracked.localCheckpoint(eager=True)
-    spark = t.sparkSession
-    targets = spark.createDataFrame(
-        [(int(v),) for v in target_vertices], "target long"
-    )
-    cursor = (
-        t.join(F.broadcast(targets), t["node_id"] == targets["target"])
-        .select("target", "node_id", "dist", "hops", "pred_node", "pred_edge")
-        .localCheckpoint(eager=True)
-    )
-    emitted = []
-    for _ in range(max_iter):
-        if cursor.isEmpty():
-            break
-        emitted.append(
-            cursor.select(
-                "target",
-                F.col("hops").cast("long").alias("seq"),
-                "node_id",
-                F.col("pred_edge").alias("arrived_by_edge"),
-                F.col("dist").alias("agg_cost"),
-            ).localCheckpoint(eager=True)
-        )
-        nxt = cursor.filter(F.col("pred_node").isNotNull()).select(
-            "target", F.col("pred_node").alias("cur")
-        )
-        cursor = (
-            t.join(F.broadcast(nxt), t["node_id"] == nxt["cur"])
-            .select("target", "node_id", "dist", "hops", "pred_node", "pred_edge")
-            .localCheckpoint(eager=True)
-        )
-    if not emitted:
-        return spark.createDataFrame(
-            [], "target long, seq long, node_id long, arrived_by_edge long, agg_cost double"
-        )
-    out = emitted[0]
-    for e in emitted[1:]:
-        out = out.unionByName(e)
-    return out
-
-
-def arc_table(edges_with_costs: DataFrame) -> DataFrame:
-    """Directed arc table for edge-based (turn-aware) routing from
-    :func:`topology.edge_costs` output: one row per traversable
-    direction of each edge segment, keeping the identifiers turn
-    restrictions key on — ``gid`` (segment) and ``way_id`` (OSM way).
-    ``arc_id`` = gid·2 + direction bit."""
-    fwd = edges_with_costs.select(
-        (F.col("gid") * 2).alias("arc_id"),
-        F.col("gid"),
-        F.col("osm_way_id").alias("way_id"),
-        F.col("source").alias("u"),
-        F.col("target").alias("v"),
-        F.col("cost_s").alias("w"),
-    )
-    rev = edges_with_costs.filter(F.col("reverse_cost_s") >= 0).select(
-        (F.col("gid") * 2 + 1).alias("arc_id"),
-        F.col("gid"),
-        F.col("osm_way_id").alias("way_id"),
-        F.col("target").alias("u"),
-        F.col("source").alias("v"),
-        F.col("reverse_cost_s").alias("w"),
-    )
-    return fwd.unionByName(rev)
-
-
-def restricted_shortest_paths(
-    arcs: DataFrame,
-    restrictions: DataFrame,
-    source_vertices: list[int],
-    max_iter: int = 50,
-) -> DataFrame:
-    """Turn-restriction-aware shortest paths — the pgRouting ``trsp``
-    analog the reference's import exists to feed
-    (`/root/reference/README.md:40-47`: osm2pgrouting emits the
-    restrictions table alongside ``ways``; plain dijkstra ignores it,
-    trsp honors it).
-
-    Formulation: edge-based search (the line-graph trick) — the
-    relaxation state is the last traversed directed arc, not the
-    vertex, so a turn ban is simply an illegal (arc → arc) transition
-    and the algorithm stays exact (vertex-state dijkstra cannot model
-    "you may be at n cheaply but only via a banned approach").
-
-    ``restrictions`` is :func:`topology.extract_turn_restrictions`
-    output: (restriction kind, from_way, via_node, to_way). OSM
-    semantics honored per kind:
-    - ``no_*`` with from ≠ to: the (from_way → to_way) transition at
-      via_node is forbidden;
-    - ``no_u_turn`` with from = to: reversing back onto the SAME
-      segment (gid) at via_node is forbidden — way-level matching
-      would also ban continuing straight through the via on the same
-      way, which the restriction does not mean;
-    - ``only_*``: arriving at via_node on from_way, every departure
-      except to_way is forbidden. Reversal onto the arrival segment is
-      otherwise allowed (as in trsp — only_ traps can make it optimal).
-
-    Scale design: identical to :func:`shortest_paths` (one equi-join +
-    min-merge per round, localCheckpoint-ed improvements, frontier-
-    emptiness termination) with state keyed on arc_id (2·|edges| rows,
-    the standard line-graph blow-up). The restrictions table is ~0.1%
-    of ways in real extracts — all three legality checks are broadcast
-    joins; nothing data-sized moves besides the frontier.
-
-    Returns (node_id, dist, hops): per-vertex minimum over arriving
-    arc states, sources at 0.
-    """
-    arcs = arcs.localCheckpoint(eager=True)  # persist the graph once
-    spark = arcs.sparkSession
-    r = restrictions.filter(
-        F.col("from_way").isNotNull()
-        & F.col("via_node").isNotNull()
-        & F.col("to_way").isNotNull()
-    )
-    no_way = r.filter(
-        F.col("restriction").startswith("no_")
-        & (F.col("from_way") != F.col("to_way"))
-    ).select("from_way", "via_node", "to_way").localCheckpoint(eager=True)
-    no_ut = r.filter(
-        F.col("restriction").startswith("no_")
-        & (F.col("from_way") == F.col("to_way"))
-    ).select("from_way", "via_node").localCheckpoint(eager=True)
-    only_r = (
-        r.filter(F.col("restriction").startswith("only_"))
-        .select(
-            F.col("from_way").alias("o_from"),
-            F.col("via_node").alias("o_via"),
-            F.col("to_way").alias("o_to"),
-        )
-        .localCheckpoint(eager=True)
-    )
-
-    src = spark.createDataFrame(
-        [(int(v),) for v in source_vertices], "node_id long"
-    )
-    # Seed arc states: every arc leaving a source (no previous arc →
-    # no restriction can apply to the first hop).
-    seed = (
-        arcs.join(F.broadcast(src), arcs["u"] == src["node_id"])
-        .select(
-            "arc_id", "gid", "way_id", "v",
-            F.col("w").alias("dist"), F.lit(1).alias("hops"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    rounds = [seed]
-    frontier = seed
-    # Pre-renamed "next arc" side: the frontier descends from `arcs`,
-    # so joining back against it with shared column names would be an
-    # ambiguous self-join.
-    nx = arcs.select(
-        F.col("arc_id").alias("n_arc"),
-        F.col("gid").alias("n_gid"),
-        F.col("way_id").alias("n_way"),
-        F.col("u").alias("n_u"),
-        F.col("v").alias("n_v"),
-        F.col("w").alias("n_w"),
-    )
-
-    def dist_view() -> DataFrame:
-        out = rounds[0]
-        for x in rounds[1:]:
-            out = out.unionByName(x)
-        return out
-
-    for _ in range(max_iter - 1):
-        f = frontier.select(
-            F.col("arc_id").alias("p_arc"),
-            F.col("gid").alias("p_gid"),
-            F.col("way_id").alias("p_way"),
-            F.col("v").alias("at"),
-            F.col("dist").alias("p_dist"),
-            F.col("hops").alias("p_hops"),
-        )
-        step = f.join(nx, f["at"] == nx["n_u"])
-        # no_<turn> across ways: kill the banned (from_way → to_way) move
-        step = step.join(
-            F.broadcast(no_way),
-            (F.col("p_way") == no_way["from_way"])
-            & (F.col("at") == no_way["via_node"])
-            & (F.col("n_way") == no_way["to_way"]),
-            "left_anti",
-        )
-        # no_u_turn: kill reversal onto the same segment at the via
-        step = step.join(
-            F.broadcast(no_ut),
-            (F.col("p_way") == no_ut["from_way"])
-            & (F.col("at") == no_ut["via_node"])
-            & (F.col("n_gid") == F.col("p_gid")),
-            "left_anti",
-        )
-        # only_<turn>: arriving on from_way at the via, the sole legal
-        # departure way is o_to
-        step = (
-            step.join(
-                F.broadcast(only_r),
-                (F.col("p_way") == only_r["o_from"])
-                & (F.col("at") == only_r["o_via"]),
-                "left",
-            )
-            .filter(F.col("o_to").isNull() | (F.col("n_way") == F.col("o_to")))
-            .drop("o_from", "o_via", "o_to")
-        )
-        cand = (
-            step.select(
-                F.col("n_arc").alias("arc_id"),
-                F.col("n_gid").alias("gid"),
-                F.col("n_way").alias("way_id"),
-                F.col("n_v").alias("v"),
-                (F.col("p_dist") + F.col("n_w")).alias("dist"),
-                (F.col("p_hops") + 1).alias("hops"),
-            )
-            .groupBy("arc_id")
-            .agg(
-                F.first("gid").alias("gid"),
-                F.first("way_id").alias("way_id"),
-                F.first("v").alias("v"),
-                F.min_by(F.struct("dist", "hops"), "dist").alias("s"),
-            )
-            .select(
-                "arc_id", "gid", "way_id", "v",
-                F.col("s.dist").alias("dist"), F.col("s.hops").alias("hops"),
-            )
-        )
-        best = dist_view().groupBy("arc_id").agg(F.min("dist").alias("old"))
-        improved = (
-            cand.join(best, "arc_id", "left")
-            .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
-            .select("arc_id", "gid", "way_id", "v", "dist", "hops")
-            .localCheckpoint(eager=True)
-        )
-        if improved.isEmpty():
-            break
-        rounds.append(improved)
-        frontier = improved
-    node_best = (
-        dist_view()
-        .groupBy(F.col("v").alias("node_id"))
-        .agg(F.min_by(F.struct("dist", "hops"), "dist").alias("s"))
-        .select("node_id", F.col("s.dist").alias("dist"), F.col("s.hops").alias("hops"))
-    )
-    zero = src.select(
-        "node_id", F.lit(0.0).alias("dist"), F.lit(0).alias("hops")
-    )
-    return (
-        node_best.unionByName(zero)
-        .groupBy("node_id")
-        .agg(F.min_by(F.struct("dist", "hops"), "dist").alias("s"))
-        .select("node_id", F.col("s.dist").alias("dist"), F.col("s.hops").alias("hops"))
     )
 
 

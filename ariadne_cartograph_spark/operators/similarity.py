@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions.vector import cosine, hyperplane_sign_bits
+from . import probe_memo
 
 
 # Below this many (corpus × query) score pairs the broadcast-crossjoin
@@ -117,35 +118,22 @@ _ROW_PRESERVING_NODES = {
 }
 
 
-# Footer-statistics memo, same contract as _PAIR_COUNT_CACHE: row
-# counts only pick between two exact plans, so a stale entry can never
-# change results. Saves the per-call footer reads + plan stringification
-# when the same logical plan routes repeatedly.
-_FOOTER_CACHE: dict[int, tuple[int | None, int | None]] = {}
-_FOOTER_CACHE_MAX = 256
-
-
 def _footer_rows(df: DataFrame) -> tuple[int | None, int | None]:
     """(exact, upper) row counts from local parquet footers — the
     ANALYZE-statistics answer, ZERO Spark jobs. Exact when the
     optimized plan is a bare file relation; an upper bound when only
     row-reducing nodes sit on top; (None, None) for any other plan
     shape, non-parquet or non-local files. Memoized by semantic plan
-    hash."""
+    hash, which saves the footer reads + plan stringification when the
+    same logical plan routes repeatedly."""
     import re
     from urllib.parse import unquote, urlparse
 
-    try:
-        key = df.semanticHash()
-    except Exception:
-        key = None
-    if key is not None and key in _FOOTER_CACHE:
-        return _FOOTER_CACHE[key]
-    out = _footer_rows_uncached(df, re, unquote, urlparse)
-    if key is not None:
-        if len(_FOOTER_CACHE) >= _FOOTER_CACHE_MAX:
-            _FOOTER_CACHE.pop(next(iter(_FOOTER_CACHE)))
-        _FOOTER_CACHE[key] = out
+    key = probe_memo.key("footer_rows", df)
+    out = probe_memo.get(key)
+    if out is None:
+        out = _footer_rows_uncached(df, re, unquote, urlparse)
+        probe_memo.put(key, out)
     return out
 
 
@@ -202,38 +190,22 @@ def _route_topk(
     return "blocked" if n_c * n_q >= threshold else "crossjoin"
 
 
-# Gate-count memo keyed on the two plans' semanticHash: the auto router
-# only needs row counts to PICK a physical strategy (both routes are
-# exact and hash-identical), so a cached — or in the worst case stale —
-# count can never change results, only the plan shape. This mirrors
-# Spark's own CBO statistics caching and makes repeated calls on the
-# same logical plans (bench loops, multi-stage pipelines reusing a
-# corpus) route with ZERO extra Spark jobs.
-_PAIR_COUNT_CACHE: dict[tuple[int, int], tuple[int, int]] = {}
-_PAIR_COUNT_CACHE_MAX = 256
-
-
 def _pair_counts(corpus: DataFrame, queries: DataFrame) -> tuple[int, int]:
     """Row counts of both sides in ONE Spark job (two 1-row aggregates
     cross-joined) instead of two `.count()` actions, memoized by
     semantic plan hash — the r6 verdict's fence-creep item: the auto
     gate was costing two scheduler round-trips per call."""
-    try:
-        key = (corpus.semanticHash(), queries.semanticHash())
-    except Exception:  # plans that refuse to hash: just run the job
-        key = None
-    if key is not None and key in _PAIR_COUNT_CACHE:
-        return _PAIR_COUNT_CACHE[key]
+    key = probe_memo.key("pair_counts", corpus, queries)
+    hit = probe_memo.get(key)
+    if hit is not None:
+        return hit
     row = (
         corpus.agg(F.count(F.lit(1)).alias("__n_c"))
         .crossJoin(queries.agg(F.count(F.lit(1)).alias("__n_q")))
         .collect()[0]
     )
     out = (row["__n_c"], row["__n_q"])
-    if key is not None:
-        if len(_PAIR_COUNT_CACHE) >= _PAIR_COUNT_CACHE_MAX:
-            _PAIR_COUNT_CACHE.pop(next(iter(_PAIR_COUNT_CACHE)))
-        _PAIR_COUNT_CACHE[key] = out
+    probe_memo.put(key, out)
     return out
 
 
@@ -866,14 +838,6 @@ def embedding_near_dup_pairs(
 _VEC_COLLAPSE_MIN_DUP_RATIO = 0.02
 _VEC_COLLAPSE_MAX_THRESHOLD = 0.99
 
-# Memoized (n_rows, n_reps) per corpus plan — same contract as
-# _PAIR_COUNT_CACHE: the stats only pick between lossless physical
-# plans. Also supplies the row count the block-grid sizing used to pay
-# a separate corpus.count() action for.
-_VEC_STATS_CACHE: dict[tuple, tuple[int, int]] = {}
-_VEC_STATS_CACHE_MAX = 256
-
-
 def _vec_collapse_cols(id_col: str, vec_col: str):
     """(__nz, __fp) grouping columns for the vector collapse. Non-zero
     finite vectors fingerprint by xxhash64 of the array (a 2⁻⁶⁴
@@ -896,23 +860,19 @@ def _vec_collapse_cols(id_col: str, vec_col: str):
 
 def _vec_dup_stats(corpus: DataFrame, id_col: str, vec_col: str) -> tuple[int, int]:
     """(row count, distinct-vector/rep count) in ONE 1-row Spark job,
-    memoized by semantic plan hash."""
-    try:
-        key = (corpus.semanticHash(), id_col, vec_col)
-    except Exception:
-        key = None
-    if key is not None and key in _VEC_STATS_CACHE:
-        return _VEC_STATS_CACHE[key]
+    memoized by semantic plan hash. Also supplies the row count the
+    block-grid sizing would otherwise pay a corpus.count() action for."""
+    key = probe_memo.key("vec_dup_stats", corpus, id_col, vec_col)
+    hit = probe_memo.get(key)
+    if hit is not None:
+        return hit
     nz, fp = _vec_collapse_cols(id_col, vec_col)
     row = corpus.select(nz, fp).agg(
         F.count(F.lit(1)).alias("__n"),
         F.countDistinct("__nz", "__fp").alias("__n_reps"),
     ).first()
     out = (row["__n"], row["__n_reps"])
-    if key is not None:
-        if len(_VEC_STATS_CACHE) >= _VEC_STATS_CACHE_MAX:
-            _VEC_STATS_CACHE.pop(next(iter(_VEC_STATS_CACHE)))
-        _VEC_STATS_CACHE[key] = out
+    probe_memo.put(key, out)
     return out
 
 

@@ -103,10 +103,3 @@ def heavy_hitters_topk(
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
     )
     return exact.orderBy(F.desc("n_occurrences"), F.asc("tok")).limit(k)
-
-
-def mg_error_bound(n_tokens: int, capacity: int, n_partitions: int) -> float:
-    """The merged-summary undercount bound: n/(capacity+1), independent
-    of partition count (errors add, but so do the per-partition n's)."""
-    del n_partitions  # documented: the bound does not grow with P
-    return n_tokens / (capacity + 1)

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions.geo import grid_cell, neighbor_cells
+from . import probe_memo
 
 _DEG_M = 111194.9  # meters per degree latitude (2πR/360, R=6371008.8)
 
@@ -157,12 +158,6 @@ PIP_BROADCAST_MAX_POLYGONS = 25_000
 # ~100 KB of cell structs per row at worst.
 PIP_MAX_CELLS_PER_POLYGON = 4_096
 
-# Row-count memo for the routing gate, same contract as
-# similarity._PAIR_COUNT_CACHE: a stale count can only mis-pick between
-# two exact plans, never change results.
-_PIP_COUNT_CACHE: dict[int, int] = {}
-
-
 def _polygon_rows(polygons: DataFrame, hint: int | None) -> int:
     """Polygon-side cardinality for routing: caller hint, else parquet
     footer statistics (zero jobs — the cosine_topk footer-stats gate),
@@ -176,17 +171,11 @@ def _polygon_rows(polygons: DataFrame, hint: int | None) -> int:
         return exact
     if upper is not None and upper <= PIP_BROADCAST_MAX_POLYGONS:
         return upper  # even the pessimistic bound fits the broadcast
-    try:
-        key = polygons.semanticHash()
-    except Exception:
-        key = None
-    if key is not None and key in _PIP_COUNT_CACHE:
-        return _PIP_COUNT_CACHE[key]
-    n = polygons.count()
-    if key is not None:
-        if len(_PIP_COUNT_CACHE) >= 256:
-            _PIP_COUNT_CACHE.pop(next(iter(_PIP_COUNT_CACHE)))
-        _PIP_COUNT_CACHE[key] = n
+    key = probe_memo.key("polygon_rows", polygons)
+    n = probe_memo.get(key)
+    if n is None:
+        n = polygons.count()
+        probe_memo.put(key, n)
     return n
 
 

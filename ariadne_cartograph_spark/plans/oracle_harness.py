@@ -172,7 +172,11 @@ def run_catalog_parity(
                 continue
             if entry.oracle is None:
                 continue
-            reports.append(compare(name, entry.fn(spark, sf_dir), entry.oracle, sf_dir, con=con))
+            try:
+                report = compare(name, entry.fn(spark, sf_dir), entry.oracle, sf_dir, con=con)
+            except Exception as e:  # a plan-build error fails this entry only
+                report = ParityReport(name, False, -1, -1, [], [], error=f"{type(e).__name__}: {e}")
+            reports.append(report)
             # near-dup builders persist shingle frames; release between
             # queries so a 78-entry sweep doesn't accumulate caches
             release_caches()

@@ -1,74 +1,19 @@
-"""Spatial table layout for the 100 TB posture (SURVEY.md §4.1
-partition pruning + §7 Phase 5): partition geo tables by XYZ tile cell
-so region-scoped queries prune at the directory level before any I/O.
+"""Table layouts for the 100 TB posture (SURVEY.md §4.1 partition
+pruning): a Z-order key for sort-on-write, the partitioned text-corpus
+layout, small-file compaction, and promoted tag-key presence columns
+that give the OSM tables row-group skipping.
 
 The reference has no partitioning (its PostGIS tables rely on GiST
 indexes, README.md:27-31 — S9, a documented non-goal for Spark); the
-Spark-native substitute is Hive-style partition layout on a coarse
-tile key plus Catalyst's static partition pruning, which turns a
-bbox/tile predicate into "read only these directories". Choose the
-partition zoom so one cell holds hundreds of MB (z5-z8 for continental
-data); finer grouping happens inside files via sort-on-write.
+Spark-native substitute is Hive-style partition layout plus Catalyst's
+static partition pruning and parquet min/max statistics, which turn a
+predicate into "read only these directories / row groups".
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from ..functions.geo import lnglat_to_tile_pixel
-
-
-def with_tile_partition(
-    df: DataFrame, lng_col: str, lat_col: str, zoom: int = 6
-) -> DataFrame:
-    """Append (pt_z, pt_x, pt_y) partition-key columns from a point."""
-    tx, ty, _, _ = lnglat_to_tile_pixel(lng_col, lat_col, zoom)
-    return (
-        df.withColumn("pt_z", F.lit(zoom))
-        .withColumn("pt_x", tx)
-        .withColumn("pt_y", ty)
-    )
-
-
-def write_partitioned_by_tile(
-    df: DataFrame,
-    path: str,
-    lng_col: str,
-    lat_col: str,
-    zoom: int = 6,
-    mode: str = "overwrite",
-) -> None:
-    """Write parquet Hive-partitioned by tile cell. repartition on the
-    partition key first so each cell is written by one task (no
-    small-file explosion: tasks × cells files otherwise)."""
-    keyed = with_tile_partition(df, lng_col, lat_col, zoom)
-    (
-        keyed.repartition("pt_x", "pt_y")
-        .write.mode(mode)
-        .partitionBy("pt_z", "pt_x", "pt_y")
-        .parquet(path)
-    )
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    key: str,
-    n_buckets: int = 8,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Write a catalog table bucketed (and optionally sorted) by
-    ``key`` — the co-located-join layout: two tables bucketed the same
-    way join with NO shuffle on either side (verified by plan in
-    tests/test_layout_config.py). At 100 TB this is the difference
-    between a fact-fact join moving both tables and moving neither;
-    pick n_buckets ≈ cluster cores × a small factor, and keep it
-    IDENTICAL across tables that join together."""
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(n_buckets, key)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table_name)
 
 
 def morton_key(x_col: str | F.Column, y_col: str | F.Column, bits: int = 16) -> F.Column:
@@ -97,60 +42,6 @@ def morton_key(x_col: str | F.Column, y_col: str | F.Column, bits: int = 16) -> 
     return out
 
 
-def write_zordered_by_tile(
-    df: DataFrame,
-    path: str,
-    lng_col: str,
-    lat_col: str,
-    partition_zoom: int = 6,
-    order_zoom: int = 14,
-    mode: str = "overwrite",
-) -> None:
-    """Tile-partitioned write with Z-order clustering INSIDE each
-    partition: directory pruning handles the coarse cut
-    (partition_zoom), and sortWithinPartitions on the Morton key of the
-    fine tile coordinates (order_zoom) gives row-group-level locality
-    for min/max skipping — parquet stores per-row-group (x, y) ranges
-    that a bbox predicate can skip without reading.
-
-    The sort leads with the partition columns and the ``zkey`` column
-    stays in the output: the dynamic-partition writer re-sorts each
-    task by the partition expressions (an UNSTABLE sort) unless the
-    incoming ordering already starts with them, and projecting the sort
-    key away would invalidate that ordering — either one silently
-    destroys the Morton order inside files (caught by
-    tests/test_layout_config.py). ``pt_z`` is a foldable constant, so
-    it must NOT be a partition column here: Catalyst eliminates
-    constant sort keys, the writer then sees its required
-    [pt_z, pt_x, pt_y] ordering unsatisfied and re-sorts. The zoom is
-    a dataset-level constant anyway — it stays as a data column
-    (read_tile_cells' pt_z predicate still works as a data filter)."""
-    keyed = with_tile_partition(df, lng_col, lat_col, partition_zoom)
-    fx, fy, _, _ = lnglat_to_tile_pixel(lng_col, lat_col, order_zoom)
-    (
-        keyed.withColumn("zkey", morton_key(fx, fy))
-        .repartition("pt_x", "pt_y")
-        .sortWithinPartitions("pt_x", "pt_y", "zkey")
-        .write.mode(mode)
-        .partitionBy("pt_x", "pt_y")
-        .parquet(path)
-    )
-
-
-def read_tile_cells(
-    spark: SparkSession, path: str, cells: list[tuple[int, int, int]]
-) -> DataFrame:
-    """Read only the given (z, x, y) cells — the predicate lands in
-    PartitionFilters (directory pruning), verified in
-    tests/test_layout.py."""
-    df = spark.read.parquet(path)
-    cond = None
-    for z, x, y in cells:
-        c = (F.col("pt_z") == z) & (F.col("pt_x") == x) & (F.col("pt_y") == y)
-        cond = c if cond is None else (cond | c)
-    return df.filter(cond) if cond is not None else df
-
-
 def write_corpus_layout(
     docs: DataFrame,
     path: str,
@@ -158,8 +49,8 @@ def write_corpus_layout(
     sort_col: str | None = "doc_id",
     mode: str = "overwrite",
 ) -> None:
-    """Text-corpus layout for the LLM-pipeline side (same partition-
-    pruning posture as the tile layout, applied to `documents`): Hive-
+    """Text-corpus layout for the LLM-pipeline side (partition
+    pruning applied to `documents`): Hive-
     partition by low-cardinality curation keys (source, lang) so
     domain-scoped jobs — per-domain dedup, mixture resampling, quality
     sweeps — prune whole directories before any I/O; sort within files

@@ -184,11 +184,6 @@ def parse_mapconfig(text: str) -> MapConfig:
     return MapConfig(tuple(rules))
 
 
-def load_mapconfig(path: str) -> MapConfig:
-    with open(path, encoding="utf-8") as f:
-        return parse_mapconfig(f.read())
-
-
 # The stock mapconfig.xml shipped with osm2pgrouting (public; the file
 # the reference's import command names at README.md:44) — highway
 # classes with per-class priority/maxspeed, plus the cycleway /

@@ -129,12 +129,6 @@ def _iter_osm_rows(source) -> Iterator[dict]:
         root.clear()  # drop the finished child (and root's ref to it)
 
 
-def _parse_osm_bytes(content: bytes) -> Iterator[dict]:
-    import io
-
-    yield from _iter_osm_rows(io.BytesIO(content))
-
-
 def _open_uri(uri: str):
     """Open a Spark file URI for streaming read. Local/file URIs open
     directly (the planet-file case this source targets); object-store

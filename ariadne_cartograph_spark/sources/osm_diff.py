@@ -275,53 +275,6 @@ def affected_relation_ids(
     return direct.unionByName(via).distinct()
 
 
-def replicate_derived_ways(
-    table,
-    nodes_updated: DataFrame,
-    ways_updated: DataFrame,
-    diff: DataFrame,
-    derive,
-    index: DataFrame | None = None,
-    txn_app: str = "osm_replication",
-    txn_version: int | None = None,
-) -> dict[str, int]:
-    """Maintain a way-keyed derived table (a
-    ``operators.merge.ParquetMergeTable`` — the line feature table, the
-    geometry store, an edge table) under one replication changeset:
-
-    1. recompute ONLY the blast radius (:func:`incremental_way_geometries`),
-    2. ``derive(rebuilt)`` maps fresh geometry rows to the table's
-       schema (must carry the table's key column),
-    3. upsert those rows, delete removed ways — both under the merge
-       table's (txn_app, txn_version) exactly-once marks, so a retried
-       changeset (the osmosis sequence number) is a no-op replay.
-
-    Returns {upserted, deleted} row counts. At scale each changeset
-    touches a handful of buckets of the bucketed table — O(diff), not
-    O(table), end to end."""
-    inc = incremental_way_geometries(
-        nodes_updated, ways_updated, diff, index=index
-    )
-    rows = derive(inc["rebuilt"])
-    assert table.key in rows.columns, f"derive() must emit key {table.key!r}"
-    n_up = rows.count()
-    # two commits per changeset → two txn versions per sequence number;
-    # without a sequence number the commits are unmarked (no replay
-    # protection) — txn_app must not be sent alone, the merge table
-    # rejects half a mark
-    up_marks = {} if txn_version is None else {
-        "txn_app": txn_app, "txn_version": 2 * txn_version
-    }
-    del_marks = {} if txn_version is None else {
-        "txn_app": txn_app, "txn_version": 2 * txn_version + 1
-    }
-    table.upsert(rows, **up_marks)
-    deleted = inc["deleted"].select(F.col("way_id").alias(table.key))
-    n_del = deleted.count()
-    table.delete(deleted, **del_marks)
-    return {"upserted": n_up, "deleted": n_del}
-
-
 def incremental_way_geometries(
     nodes_updated: DataFrame,
     ways_updated: DataFrame,

@@ -372,29 +372,3 @@ def incremental_near_dup_filter(
     store = spark.read.parquet(index_dir)
     dropped = _dropped_ids(spark, store, batch_id, id_col, threshold)
     return batch.join(dropped, id_col, "left_anti")
-
-
-def run_incremental_dedup(
-    stream: DataFrame,
-    store_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    **kwargs,
-) -> None:
-    """T6-style wiring: foreachBatch(incremental_near_dup_filter) —
-    kept rows append to ``out_dir``, the index accumulates in
-    ``store_dir``. availableNow drains the backlog and stops."""
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        kept = incremental_near_dup_filter(
-            batch.sparkSession, batch, store_dir, **kwargs
-        )
-        kept.write.mode("append").parquet(out_dir)
-
-    (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )

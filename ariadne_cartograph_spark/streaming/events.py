@@ -5,11 +5,9 @@ streaming layer, built so every streaming transformation shares its
 semantics with an oracle-checked batch twin in
 ``plans/events_queries.py``:
 
-    tumbling/sliding  ≙ events_tumbling_hourly / events_sliding_hourly
+    tumbling          ≙ events_tumbling_hourly
     session_window    ≙ sessionize_bounds (gap semantics)
     dedup-in-watermark≙ dedup_exact on the key
-    foreachBatch MERGE≙ operators/merge.py (T6 incremental enrichment —
-                        the reference's `-a` append mode, README.md:19)
 
 Scale notes: all aggregations are keyed by (window, …) — state is
 bounded by watermark eviction; sinks use Update/Append modes, never
@@ -76,20 +74,6 @@ def tumbling_counts(
         .groupBy(F.window("ts", window).alias("w"), F.col("event_type"))
         .agg(F.count(F.lit(1)).alias("n"), money_sum("value").alias("total_value"))
         .select(F.col("w.start").alias("win_start"), "event_type", "n", "total_value")
-    )
-
-
-def sliding_counts(
-    stream: DataFrame,
-    window: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"), money_sum("value").alias("total_value"))
-        .select(F.col("w.start").alias("win_start"), "n", "total_value")
     )
 
 
@@ -187,7 +171,7 @@ def dedup_events(stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
     return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
 
 
-# ---- T5/T6: sinks — foreachBatch reusing the batch MERGE -------------------
+# ---- sinks -------------------------------------------------------------------
 
 
 def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append"):
@@ -201,124 +185,3 @@ def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append"):
     )
     q.awaitTermination()
     return q
-
-
-def incremental_upsert_sink(
-    stream_df: DataFrame,
-    table_path: str,
-    key: str,
-    checkpoint_dir: str,
-    update_cols: list[str] | None = None,
-):
-    """T6: every micro-batch MERGEs into a ParquetMergeTable — the
-    engine's incremental re-enrichment sink (same upsert as the batch
-    reference flow, reused via foreachBatch)."""
-    from ..operators.merge import ParquetMergeTable
-
-    def do_merge(batch_df: DataFrame, batch_id: int) -> None:
-        table = ParquetMergeTable(batch_df.sparkSession, table_path, key)
-        table.upsert(batch_df, update_cols)
-
-    q = (
-        stream_df.writeStream.foreachBatch(do_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-# ---- T4b: arbitrary stateful processing -----------------------------------
-
-_STATE_SCHEMA = StructType([StructField("total_events", LongType())])
-_OUT_SCHEMA = StructType(
-    [StructField("user_id", LongType()), StructField("total_events", LongType())]
-)
-
-
-def running_user_counts(stream: DataFrame) -> DataFrame:
-    """applyInPandasWithState: running per-user event counts across
-    micro-batches (the minimal arbitrary-state operator; state is one
-    long per user)."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def update(key, pdfs, state: "GroupState"):
-        import pandas as pd
-
-        n = sum(len(p) for p in pdfs)
-        total = (state.get[0] if state.exists else 0) + n
-        state.update((total,))
-        yield pd.DataFrame({"user_id": [key[0]], "total_events": [total]})
-
-    return stream.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=_OUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-# ---- T4c: transformWithStateInPandas (Spark 4 arbitrary-state API) ---------
-
-
-def running_user_totals_tws(stream: DataFrame) -> DataFrame:
-    """transformWithStateInPandas: per-user running (n_events,
-    total_value) across micro-batches via the Spark 4 StatefulProcessor
-    API (typed ValueState handle; the successor to
-    applyInPandasWithState, adding composite state types — Value/List/
-    Map — and registrable timers).
-
-    Each batch emits the key's CURRENT running totals (Update mode);
-    n_events is monotone, so the final totals row per user is the one
-    with max n_events — which a drained sink can select
-    deterministically.
-
-    SANDBOX CAVEAT: this build's transformWithState runs a driver-side
-    Python schema-validation worker that connects back to a local state
-    server socket; environments that block local connections (this CI
-    sandbox does) crash it with "driver worker exited unexpectedly"
-    before the first batch. The operator is therefore exercised by a
-    skip-on-crash test (tests/test_streaming.py) rather than a
-    driver-window catalog entry; applyInPandasWithState
-    (running_user_counts above) is the driver-hashed stateful evidence.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: "StatefulProcessorHandle") -> None:
-            self._totals = handle.getValueState(
-                "totals", "n BIGINT, total DOUBLE"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            prev = self._totals.get()
-            n, total = (prev[0], prev[1]) if prev is not None else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [total],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        RunningTotals(),
-        outputStructType="user_id BIGINT, n_events BIGINT, total_value DOUBLE",
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -72,84 +72,3 @@ def streaming_gram(
     )
     q.awaitTermination()
     return acc
-
-
-def streaming_gram_durable(
-    spark: SparkSession,
-    stage_dir: str,
-    gram_dir: str,
-    checkpoint_dir: str,
-    q_scale: int = Q_SCALE,
-    fail_at_batch: int | None = None,
-) -> None:
-    """Crash-tolerant streaming Gram maintenance (r12 verdict task #7 —
-    the in-memory accumulator above proves associativity under CLEAN
-    replay; this is the restartable production shape).
-
-    Each micro-batch's exact d² int64 partial lands in
-    ``gram_dir/batch_id=N`` with per-batch-directory OVERWRITE, keyed
-    by the Structured Streaming batch id. foreachBatch is
-    at-least-once: after a crash, the restarted query replays the
-    uncommitted batch with the SAME id over the SAME file-source offset
-    range, so the overwrite makes accumulation exactly-once — a
-    partial written just before the crash is replaced, never
-    double-counted. :func:`read_gram_store` folds the store in
-    unbounded Python ints; equality with the offline
-    :func:`operators.pca.gram_matrix` is test-pinned under an injected
-    mid-stream crash (tests/test_pca.py).
-
-    ``fail_at_batch``: test hook — raise AFTER writing that batch's
-    partial (the hard case: state persisted, commit lost)."""
-    from pyspark.sql import functions as F
-
-    schema = spark.read.parquet(stage_dir).schema
-
-    def _process(batch: DataFrame, batch_id: int) -> None:
-        qdf = batch.select(quantize_vec(F.col("embedding"), q_scale).alias("q"))
-        G = gram_matrix(qdf, "q")
-        if G:
-            d = len(G)
-            rows = [(i + 1, j + 1, G[i][j]) for i in range(d) for j in range(d)]
-            (
-                spark.createDataFrame(rows, "i int, j int, s long")
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(gram_dir, f"batch_id={batch_id}"))
-            )
-        if fail_at_batch is not None and batch_id == fail_at_batch:
-            raise RuntimeError(f"injected crash after batch {batch_id}")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def read_gram_store(spark: SparkSession, gram_dir: str) -> list[list[int]]:
-    """Fold the per-batch partial store into the total Gram. The
-    cross-batch sum runs in unbounded Python ints (each batch partial
-    is an exact, envelope-asserted int64 aggregate; their SUM may not
-    fit int64, so no Spark-side aggregation here — the store is
-    model-sized, #batches·d² rows), then the int64 envelope is
-    re-asserted on the total for oracle replayability."""
-    rows = spark.read.parquet(gram_dir).collect()
-    if not rows:
-        return []
-    agg: dict[tuple[int, int], int] = {}
-    for r in rows:
-        k = (r["i"], r["j"])
-        agg[k] = agg.get(k, 0) + int(r["s"])
-    d = max(i for i, _ in agg)
-    G = [[0] * d for _ in range(d)]
-    for (i, j), s in agg.items():
-        assert abs(s) < 2**63, "int64 Gram envelope exceeded — lower q_scale"
-        G[i - 1][j - 1] = s
-    return G

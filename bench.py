@@ -5,10 +5,8 @@ sf0.1) on local[$SPARK_GRAFT_CPUS]. Prints ONE JSON line:
 Regression fence: per-query times are compared against BASELINE_QUERIES
 below — the single source of truth for fence values (BASELINE.md points
 here). Fences are per-query clean-run minimums, re-pinned when the data
-or the plan legitimately changes (the r1 numbers were retired in r4
-after the driver regenerated all parquet tables; see the
-BASELINE_QUERIES comment). Any query >2x its fence is reported in a
-"regressions" key and on stderr.
+or the plan legitimately changes. Any query >2x its fence is reported
+in a "regressions" key and on stderr.
 """
 
 from __future__ import annotations
@@ -18,35 +16,16 @@ import os
 import sys
 import time
 
-# Round-4/5 fences at sf0.1 / local[32] (latest clean-run minimum). The r1
-# fence was retired in r4: the driver regenerated every parquet table in
-# r3 (schema change on ts columns proves it), so r1 timings are not
-# comparable to the current data. Every headline query now has an entry;
-# queries added later get one from their first recorded round.
+# Fences at sf0.1 / local[32]: per-query clean-run minimums.
 BASELINE_QUERIES: dict[str, float] = {
-    # asof + ways fences sit at the high end of their observed clean-run
-    # spread (0.46-0.91 / 2.05-3.96 within one bench process) — both
-    # queries are JVM-state sensitive; isolated steady-state is ~2x
-    # lower, so a 2x-of-fence flag still catches real regressions.
-    "asof_purchase_after_signup": 0.6,
+    "asof_purchase_after_signup": 0.6,  # high end of a JVM-state-sensitive spread
     "events_stream_session_parity": 3.406,
     "events_tumbling_hourly": 0.427,
-    "minhash_lsh_near_dup": 1.8,  # r6 re-pin (gated collapse skip)
-    # r5 Arrow-path fences (the advice item): the OSM XML mapInPandas
-    # ingest and the multimodal image mapInPandas stage — a regression
-    # in the Arrow machinery is now fence-visible.
-    "multimodal_image_stats": 0.6,
-    # r5 re-pin; r13 idle-to-idle drift (2.387 -> 2.974) settled by r14
-    # A/B: the full ingest code path is byte-identical to the r12
-    # checkout (git diff empty over sources/osm.py, tables.py,
-    # session.py, style.py) and interleaved isolated mins OVERLAP
-    # (r14 {2.148, 2.33} vs r12 {2.076, 2.33} on the same host state)
-    # — the documented JVM/host-state class, fence confirmed.
-    "osm_ingest_feature_tables": 2.47,
+    "minhash_lsh_near_dup": 1.8,  # r6 re-pin: gated collapse skip
+    "multimodal_image_stats": 0.6,  # r5: Arrow-path (mapInPandas) fence
+    "osm_ingest_feature_tables": 2.47,  # r5 re-pin; r14 A/B confirmed
     "ngram_jaccard_near_dup": 1.55,  # r5 re-pin
-    # r6: the gate pass (xxhash64 fingerprint + 1-row countDistinct)
-    # rides on top of the r4 prefix plan; clean-run minimum 3.19.
-    "ngram_jaccard_skewed_corpus": 3.2,
+    "ngram_jaccard_skewed_corpus": 3.2,  # r6: gate pass on top of the prefix plan
     "q10_returned_items": 0.987,
     "q14_promo_revenue": 0.417,
     "q1_pricing_summary": 0.417,
@@ -57,116 +36,38 @@ BASELINE_QUERIES: dict[str, float] = {
     "similarity_topk_cosine": 0.62,  # r5 re-pin
     "text_bm25_topk": 0.88,  # r5 re-pin
     "text_fingerprint_exact_dedup": 0.374,
-    "text_token_topk_sketch": 0.739,  # r5: MG-sketch Arrow path fence
+    "text_token_topk_sketch": 0.739,  # r5: MG-sketch Arrow-path fence
     "ways_enrichment_pipeline": 2.6,
-    # r12 continuation: first fences for the three new headline entries,
-    # pinned at their first clean-run minima (load ~2.5, same session
-    # that landed them). span_removal's spread is warm-up-sensitive
-    # (2.51 first run, 1.57 steady) — pinned near the steady min like
-    # its detection sibling.
-    "text_repeated_span_removal": 1.6,
-    "fuzzy_join_part_names": 0.86,
-    "embedding_pca_project": 1.2,
+    "text_repeated_span_removal": 1.6,  # r12: pinned near the steady-state min
+    "fuzzy_join_part_names": 0.86,  # r12: first clean-run minimum
+    "embedding_pca_project": 1.2,  # r12: first clean-run minimum
 }
 REGRESSION_FACTOR = 2.0
 # The scale the BASELINE_QUERIES fences were measured at. Runs at any
 # other sf skip the fence comparison and say so in the JSON.
 FENCE_SF = 0.1
 
-# sf1 (10x replica) ENGINE-side fences, measured by
-# tools/scale_rehearsal.py with the r9 split clock (engine collect
-# time only, oracle excluded; see the clock caveats in that tool).
-# The rehearsal flags any entry whose engine clock exceeds 2x its
-# fence. Top-12 engine-side entries pinned from the r9 idle-machine
-# re-run (the full-sweep numbers ran concurrent with other work and
-# were up to 1.9x inflated — geo_line_simplify 40.0 vs 21.6 quiet).
-# r10: all 12 fences re-pinned wholesale from the round-close
-# idle-machine rehearsal (load ~1.6, engine total 655s→421s) after
-# the round's optimizations — fold-min fingerprints, fan_out on
-# under-split CPU scans (text + embeddings), single-bind simplify,
-# dedup-first approx-distinct. Per-entry provenance in
-# SCALE_REHEARSAL_sf1.json note_r10 keys. trajectory's 27s produces
-# a 62M-row pair set (output-bound); docs_incremental's 27s is
-# 4 micro-batches of fixed streaming overhead (profiled, documented
-# in the entry).
+# sf1 (10x replica) ENGINE-side fences for tools/scale_rehearsal.py,
+# which flags any entry whose engine clock exceeds 2x its fence.
+# Per-entry provenance is in SCALE_REHEARSAL_sf1.json.
 SF1_ENGINE_FENCES: dict[str, float] = {
     "agg_approx_distinct": 5.2,  # loaded-run value; idle 5.0
-    # r13 re-pin: gated exact-dup doc collapse in front of the window
-    # explode (r12 verdict task #3) — on the all-duplicate 10x replica
-    # the explode/groupBy/md5 now run once per distinct text, not per
-    # copy: isolated collect-mode mins settled at [7.6, 4.8, 4.3, 4.1]
-    # (was 12.5–18.6 s spread at r12). Fence carries the documented
-    # in-context JVM-state margin over the 4.1 s min, the simhash
-    # precedent. At sf0.1 (0.16% dups) the gate skips and the naive
-    # plan is unchanged; the probe is memoized by plan hash.
-    "text_repeated_span_removal": 6.0,
-    # r14 re-pin 10.0 -> 7.5: joined ENGINE_CLOCK_DIGEST (the 1M-row
-    # Arrow collect was the recorded cost, not the plan); fresh-process
-    # digest runs [4.92, 0.44, 0.48] — fence carries in-context margin
-    # over the cold reading. Collect tax recorded as collect_sec.
-    "window_time_range_frame": 7.5,
-    # r12 re-pin: persisted fingerprint frame + the semantic_dedup
-    # vector collapse (12.7 s → 8.5 s isolated min)
-    "corpus_multimodal_curation": 8.8,
-    # r11 re-pin: batch ranges replace the ntile global sort, fan_out
-    # before the shingle projection, pair_ids re-spread before its
-    # checkpoint (25.6 s → 12.8 s warm at sf1)
-    # r12 re-pin: set-fingerprint verify short-circuit, single-shuffle
-    # pair distinct, 16-bucket store (15.1 s → 10.9 s isolated min)
-    # r13 re-pin: the set fingerprint is PERSISTED in the shingle
-    # store (__fp/__n) so later batches stop re-sorting stored arrays
-    # — isolated min 13.7 → 10.6 same-day A/B (warm runs 10.6-11.4).
-    # Two alternatives were measured and REJECTED same-day: a
-    # same-session band-store cache of localCheckpointed deltas
-    # (13.3 vs 11.1 old — the parquet re-read was never the cost) and
-    # a split fp-then-arrays verify (17.4 — the arrays never balloon
-    # through a shuffle, the split only added join passes).
-    # r14 re-pin: the store unified into ONE (__batch,__bucket)-
-    # partitioned table written once per micro-batch — the index write
-    # IS the materialization barrier, retiring the idx and dropped
-    # localCheckpoints and the second store write (3 fewer actions per
-    # batch; the replay was driver-overhead bound). Same-day isolated
-    # A/B on the same host state: 10.41 -> 6.87 s min (runs
-    # [9.4, 7.9, 7.4, 6.9]); fence carries the in-context margin.
-    "docs_incremental_dedup_parity": 8.5,
-    # r14: joined ENGINE_CLOCK_DIGEST; fresh-process digest runs
-    # [6.66, 1.13, 1.0] — fence 9.1 kept (already carries the margin).
-    "geo_line_simplify": 9.1,
-    # r11 re-pin: entry switched to the measured auto-router — on the
-    # 10x replica the exact-dup collapse cuts the count join's
-    # intermediate pairs 100x (113M -> ~1M; 16.7 s -> 3.3 s warm).
-    # Costs two 1-row measurement jobs (~0.3-0.8 s) at sf0.1 where the
-    # gate skips — the right trade at scale.
-    "ngram_jaccard_near_dup": 4.5,
-    # r12 re-pin: popcount-packed Hamming verify + persisted signature
-    # frames in the block join (10.5 s → 3.2 s isolated min; in-context
-    # rehearsal runs land ~8 s after 120+ prior entries — the fence
-    # carries that documented JVM-state margin so it flags real plan
-    # regressions, not run position)
-    "simhash_near_dup": 4.5,
+    "text_repeated_span_removal": 6.0,  # r13: gated exact-dup doc collapse
+    "window_time_range_frame": 7.5,  # r14: digest clock
+    "corpus_multimodal_curation": 8.8,  # r12: persisted fingerprint + vector collapse
+    "docs_incremental_dedup_parity": 8.5,  # r14: one partitioned store per micro-batch
+    "geo_line_simplify": 9.1,  # r14: digest clock
+    "ngram_jaccard_near_dup": 4.5,  # r11: measured auto-router
+    "simhash_near_dup": 4.5,  # r12: popcount Hamming verify + persisted signatures
     "similarity_ann_ivfpq": 5.5,  # loaded-run value; idle 4.9
     "text_rolling_fingerprint": 9.6,  # loaded-run value; idle 7.0
     "text_winnow_fingerprint_md5": 4.7,  # loaded-run value; idle 2.5
-    # r11 re-pin: bitmask all-pairs route for the dense-similarity
-    # regime (26.3 s → 2.5 s warm at sf1; fence keeps cold-JIT margin)
-    "trajectory_jaccard_pairs": 6.0,
-    # r13 re-pin 15.0 -> 11.0 (verdict task #5): the rehearsal clock
-    # for this entry is now the non-prunable xxhash64 digest consumer
-    # (scale_rehearsal.ENGINE_CLOCK_DIGEST), not the 1.47M-row Arrow
-    # collect that swung 10-31s with JVM state. Three consecutive
-    # fresh-process digest runs on an idle host: 12.0 / 11.2 / 10.0 s
-    # (collect tax, recorded separately as collect_sec: ~15-16 s).
-    "ways_enrichment_pipeline": 11.0,
-    # r14 re-pin 10.5 -> 8.0: joined ENGINE_CLOCK_DIGEST; fresh-process
-    # digest runs [5.14, 0.41, 0.42] — the old 10.5 measured the 1.5M-row
-    # Arrow collect, recorded as collect_sec from now on.
-    "window_running_total": 8.0,
-    # r14 first pins (newly digest-clocked, previously unfenced):
-    # fresh-process digest runs [6.13, 1.1, 0.99] / [6.11, 1.06, 0.77]
-    "window_rank_variants": 9.0,
-    "scalar_array_funcs": 9.0,
-    # fresh-process digest runs [4.27, 0.36, 0.38]
-    "window_range_frame": 7.0,
+    "trajectory_jaccard_pairs": 6.0,  # r11: bitmask all-pairs route
+    "ways_enrichment_pipeline": 11.0,  # r13: digest clock
+    "window_running_total": 8.0,  # r14: digest clock
+    "window_rank_variants": 9.0,  # r14: first digest-clocked pin
+    "scalar_array_funcs": 9.0,  # r14: first digest-clocked pin
+    "window_range_frame": 7.0,  # r14: first digest-clocked pin
 }
 
 
@@ -179,8 +80,8 @@ def main() -> int:
     headline = get_headline()
 
     # Failure-injection hook for the harness's own test: proves one
-    # broken query cannot take down the whole bench (the r3 failure
-    # mode). tests/test_bench_harness.py sets this.
+    # broken query cannot take down the whole bench
+    # (tests/test_bench_harness.py sets this).
     inject = os.environ.get("SPARK_GRAFT_BENCH_INJECT_ERROR")
     if inject:
         def _boom(_spark, _sf_dir):
@@ -212,9 +113,8 @@ def main() -> int:
 
     from ariadne_cartograph_spark.operators.dedup import release_caches
 
-    # Load-aware repeats (r8 verdict: a +3.9% drift on a ZERO-line diff
-    # could only be diagnosed by hand). Each query runs `repeats` times
-    # and records the MIN — the machine-load-independent number — plus
+    # Load-aware repeats: each query runs `repeats` times and records
+    # the MIN — the machine-load-independent number — plus
     # os.getloadavg() before/after the whole loop so an artifact from a
     # busy host is visibly from a busy host.
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
@@ -229,8 +129,7 @@ def main() -> int:
             t0 = time.time()
             # A single broken query must not take the whole bench down —
             # a harness that can't produce numbers under partial failure
-            # is itself a correctness bug (r3 lost all 15 healthy
-            # timings to one analysis exception).
+            # is itself a correctness bug.
             try:
                 df = fn(spark, sf_dir)
                 n = df.count()
@@ -258,10 +157,9 @@ def main() -> int:
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
 
     # BASELINE_QUERIES is pinned at sf0.1: comparing another scale's
-    # timings against it labels a data-size difference a "regression"
-    # (the committed r11 BENCH_sf1.json artifact read that way and
-    # needed the commit message to explain itself). Fences only fire at
-    # their own scale; other scales get an explicit skip marker.
+    # timings against it labels a data-size difference a "regression".
+    # Fences only fire at their own scale; other scales get an explicit
+    # skip marker.
     fences_apply = sf_val == FENCE_SF
     regressions = (
         {
@@ -284,13 +182,11 @@ def main() -> int:
         "unit": "sec",
         "queries": timings,
         "sf": sf_val,
-        # Load context (r8 advice): repeats per query (min reported),
-        # 1/5/15-min load averages at loop start/end.
+        # Load context: repeats per query (min reported), 1/5/15-min
+        # load averages at loop start/end.
         "repeats": repeats,
         # Session width, so an artifact proves which $SPARK_GRAFT_CPUS
-        # it actually ran at (r14 verdict: the flat 8-vs-32 scaling
-        # ratios were read as "CPUS ignored" because nothing in the
-        # output showed the master width).
+        # it actually ran at.
         "parallelism": spark.sparkContext.defaultParallelism,
         "load_avg_start": load_start,
         "load_avg_end": [round(x, 2) for x in os.getloadavg()],
@@ -305,12 +201,9 @@ def main() -> int:
         )
     if errors:
         out["errors"] = errors
-    # Per-run times go to stderr, NOT the stdout JSON line: the r13
-    # official comparison was lost (PERF_r14 prev_bench_ok=false)
-    # because the `runs` dict pushed the one stdout line past the
-    # driver's capture window and it could not be parsed. The stdout
-    # contract line stays compact; full per-run detail is one stderr
-    # line (and each query's runs were already printed per-query above).
+    # Per-run times go to stderr, NOT the stdout JSON line: the one
+    # stdout line must stay compact enough for a consumer's capture
+    # window to parse it.
     print(f"# runs {json.dumps(all_runs)}", file=sys.stderr)
     print(json.dumps(out))
     # Non-zero rc only when nothing could be measured at all.

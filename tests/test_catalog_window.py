@@ -12,12 +12,6 @@ from ariadne_cartograph_spark.plans.catalog import (
     DRIVER_WINDOW,
     REGISTRY,
     WINDOW_ORDER,
-    WINDOW_ORDER_R10,
-    WINDOW_ORDER_R11,
-    WINDOW_ORDER_R12,
-    WINDOW_ORDER_R13,
-    WINDOW_ORDER_R14,
-    WINDOW_ORDER_R15,
     get_oracles,
     get_queries,
 )
@@ -51,14 +45,13 @@ def test_window_entries_are_oracled():
 
 @pytest.mark.parametrize(
     "window",
-    [WINDOW_ORDER, WINDOW_ORDER_R10, WINDOW_ORDER_R11, WINDOW_ORDER_R12, WINDOW_ORDER_R13, WINDOW_ORDER_R14, WINDOW_ORDER_R15],
-    ids=["live", "r10", "r11", "r12", "r13", "r14", "r15"],
+    [WINDOW_ORDER],
+    ids=["live"],
 )
 def test_prestaged_windows_hold_all_invariants(window):
-    """The pre-staged round-10 rotation (catalog.WINDOW_ORDER_R10) must
-    satisfy the same invariants as the live window NOW, so next round's
-    one-line swap cannot break the suite: driver-sized, no dupes, every
-    entry registered + oracled, every operator tag covered."""
+    """The window holds every invariant at once: driver-sized, no
+    dupes, every entry registered + oracled, every operator tag
+    covered."""
     get_queries()
     assert len(window) == DRIVER_WINDOW
     assert len(set(window)) == len(window)

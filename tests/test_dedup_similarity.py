@@ -293,23 +293,6 @@ def test_pq_adc_recall_and_training(spark):
     }
     assert got == got2
 
-    # reconstruction of a codeword row is exact (zero quantization error)
-    from ariadne_cartograph_spark.operators.pq import pq_reconstruct
-    from ariadne_cartograph_spark.functions.vector import as_double
-    rec = (
-        enc.filter(F.col("vec_id") == ranked_ids[0])
-        .select(
-            F.zip_with(
-                pq_reconstruct("pq_codes", books),
-                as_double(F.col("embedding")),
-                lambda x, y: F.abs(x - y),
-            ).alias("d")
-        )
-        .select(F.array_max("d").alias("maxd"))
-        .first()
-    )
-    assert rec["maxd"] == 0.0
-
     # Lloyd refinement strictly reduces total reconstruction error
     err0 = enc.agg(F.sum("pq_err")).first()[0]
     books3 = pq_codebooks(emb, "vec_id", "embedding", m=4, k=16, n_iter=3)

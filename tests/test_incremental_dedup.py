@@ -8,10 +8,7 @@ from pyspark.sql import functions as F
 
 from ariadne_cartograph_spark.operators import dedup as D
 from ariadne_cartograph_spark.sources.tables import load_table
-from ariadne_cartograph_spark.streaming.docs import (
-    incremental_near_dup_filter,
-    run_incremental_dedup,
-)
+from ariadne_cartograph_spark.streaming.docs import incremental_near_dup_filter
 
 SF = "/root/testdata/sf0.001"
 THRESH = 0.6
@@ -181,55 +178,3 @@ def test_legacy_store_rejected_with_clear_error(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="predates the r14"):
         incremental_near_dup_filter(spark, dup, store, threshold=THRESH)
-
-
-def test_foreachbatch_wiring(spark, tmp_path):
-    docs = load_table(spark, SF, "documents")
-    src = str(tmp_path / "src")
-    # two replayable files (one per id range) — micro-batch granularity
-    docs.filter(F.col("doc_id") < 50).coalesce(1).write.parquet(src)
-    docs.filter(F.col("doc_id") >= 50).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    run_incremental_dedup(
-        stream,
-        store_dir=str(tmp_path / "store2"),
-        out_dir=str(tmp_path / "out"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        threshold=THRESH,
-    )
-    got = {r.doc_id for r in spark.read.parquet(str(tmp_path / "out")).collect()}
-
-    # File-replay order is not guaranteed chronological (see commit
-    # f260c26), so accept the arrival-precedence replay of EITHER
-    # order: process batches with the same rule (drop on any pair with
-    # a stored doc, or a smaller-id doc in-batch) over the offline
-    # pair relation.
-    docs_all = load_table(spark, SF, "documents")
-    pairs = {
-        frozenset((r.id_a, r.id_b))
-        for r in D.minhash_near_dup_pairs(
-            docs_all, "doc_id", "text", n_hashes=32, bands=8, threshold=THRESH
-        ).collect()
-    }
-    D.release_caches()
-    ids = sorted(r.doc_id for r in docs_all.select("doc_id").collect())
-    b1, b2 = [i for i in ids if i < 50], [i for i in ids if i >= 50]
-
-    def replay(batches):
-        seen, kept = set(), set()
-        for bat in batches:
-            for d in bat:  # id order within batch
-                smaller_in_batch = {x for x in bat if x < d}
-                if any(frozenset((d, s)) in pairs for s in seen | smaller_in_batch):
-                    pass
-                else:
-                    kept.add(d)
-            seen |= set(bat)
-        return kept
-
-    assert got in (replay([b1, b2]), replay([b2, b1]))

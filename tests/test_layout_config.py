@@ -1,14 +1,53 @@
-"""Tests for the YAML config source (S5) and tile-partitioned layout
+"""Tests for the YAML config source (S5), the JDBC boundary and table layouts
 (partition pruning, SURVEY.md §4.1)."""
 
 from __future__ import annotations
 
 import os
+import struct
 
+import pandas as pd
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from ariadne_cartograph_spark.sources import config as C
 from ariadne_cartograph_spark.sources import layout as L
+
+
+# WKB (OGC Well-Known Binary) LineString codec: the JDBC tests below
+# store way geometries the way PostGIS hands them over JDBC, as WKB
+# bytes in a BLOB, and decode them back to array<struct<lng,lat>>.
+_WKB_LINESTRING = 2
+
+
+def _encode_linestring(points):
+    """(lng, lat) pairs → little-endian WKB LineString bytes."""
+    out = bytearray(struct.pack("<BII", 1, _WKB_LINESTRING, len(points)))
+    for x, y in points:
+        out += struct.pack("<dd", float(x), float(y))
+    return bytes(out)
+
+
+def _decode_linestring(buf):
+    """WKB LineString bytes (either byte order) → (lng, lat) pairs."""
+    bo = "<" if buf[0] == 1 else ">"
+    gtype, n = struct.unpack_from(f"{bo}II", buf, 1)
+    assert gtype == _WKB_LINESTRING, gtype
+    return [struct.unpack_from(f"{bo}dd", buf, 9 + 16 * i) for i in range(n)]
+
+
+def _wkb_to_geom_col(col):
+    """WKB binary column → array<struct<lng,lat>> column."""
+
+    @pandas_udf("array<struct<lng double, lat double>>")
+    def wkb_to_geom(b: pd.Series) -> pd.Series:
+        return b.map(
+            lambda v: None
+            if v is None
+            else [{"lng": x, "lat": y} for x, y in _decode_linestring(bytes(v))]
+        )
+
+    return wkb_to_geom(F.col(col))
 
 
 def test_load_config_roundtrip(tmp_path):
@@ -40,55 +79,6 @@ def test_load_config_missing_file(tmp_path):
     assert C.jdbc_options(cfg)["url"].startswith("jdbc:postgresql://localhost:5432/")
 
 
-def test_tile_partitioned_write_prunes(spark, tmp_path):
-    # Points in two distinct z6 tile cells (Los Angeles vs Berlin).
-    df = spark.createDataFrame(
-        [(1, -118.12, 34.14), (2, -118.11, 34.13), (3, 13.40, 52.52)],
-        "id long, lng double, lat double",
-    )
-    path = os.path.join(str(tmp_path), "pts")
-    L.write_partitioned_by_tile(df, path, "lng", "lat", zoom=6)
-
-    # layout on disk is hive-partitioned
-    assert any(d.startswith("pt_z=6") for d in os.listdir(path))
-
-    keyed = L.with_tile_partition(df, "lng", "lat", 6).filter(F.col("id") == 1).collect()[0]
-    cell = (6, keyed.pt_x, keyed.pt_y)
-    got = L.read_tile_cells(spark, path, [cell])
-    assert sorted(r.id for r in got.collect()) == [1, 2]
-
-    # the cell predicate must land in PartitionFilters (directory
-    # pruning), not post-scan filters
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan
-    pf = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
-    assert "pt_x" in pf and "pt_y" in pf, plan
-
-
-def test_bucketed_join_eliminates_shuffle(spark):
-    """Two tables bucketed identically on the join key must sort-merge
-    join with no Exchange on either side — the co-located fact-fact
-    join layout for 100 TB."""
-    a = spark.range(0, 1000).withColumn("v", F.col("id") * 2)
-    b = spark.range(0, 1000).withColumn("w", F.col("id") + 1)
-    L.write_bucketed(a, "t_bucket_a", "id", n_buckets=4, sort_cols=["id"])
-    L.write_bucketed(b, "t_bucket_b", "id", n_buckets=4, sort_cols=["id"])
-    try:
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = spark.table("t_bucket_a").join(spark.table("t_bucket_b"), "id")
-            assert joined.count() == 1000
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange" not in plan, plan
-            assert "SortMergeJoin" in plan, plan
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_bucket_a")
-        spark.sql("DROP TABLE IF EXISTS t_bucket_b")
-
-
 def test_morton_key_interleaves_bits(spark):
     from ariadne_cartograph_spark.sources.layout import morton_key
 
@@ -107,30 +97,6 @@ def test_morton_key_interleaves_bits(spark):
         assert z == ref(x, y), (x, y, z, ref(x, y))
     # locality sanity: neighbors in 2-D stay within a small 1-D range
     assert abs(ref(3, 5) - ref(4, 5)) < 64
-
-
-def test_zordered_write_sorted_within_partition(spark, tmp_path):
-    from ariadne_cartograph_spark.sources.layout import morton_key, write_zordered_by_tile
-
-    df = spark.range(2000).select(
-        F.col("id"),
-        ((F.col("id") % 360) - 180.0 + 0.5).alias("lng"),
-        ((F.col("id") % 120) - 60.0 + 0.5).alias("lat"),
-    )
-    path = str(tmp_path / "zordered")
-    write_zordered_by_tile(df, path, "lng", "lat", partition_zoom=2, order_zoom=10)
-    back = spark.read.parquet(path)
-    assert back.count() == 2000
-    # rows inside each parquet file must be in Morton order (that IS the
-    # row-group-skipping property the writer promises); zkey is stored
-    keyed = back.withColumn("fname", F.input_file_name()).withColumn(
-        "mono", F.monotonically_increasing_id()
-    )
-    pdf = keyed.select("fname", "mono", "zkey").toPandas()
-    assert len(pdf["fname"].unique()) > 1
-    for _, g in pdf.sort_values("mono").groupby("fname"):
-        zs = g["zkey"].tolist()
-        assert zs == sorted(zs), "file not in Morton order"
 
 
 def test_jdbc_options_postgres_shape():
@@ -200,11 +166,6 @@ def test_jdbc_geometry_wkb_roundtrip_enrich_merge(spark, tmp_path):
     import pytest
 
     from ariadne_cartograph_spark.functions.geometry import linestring_length_m
-    from ariadne_cartograph_spark.functions.wkb import (
-        decode_linestring,
-        encode_linestring,
-        wkb_to_geom_col,
-    )
     from ariadne_cartograph_spark.operators.merge import merge_into
 
     cfg = {
@@ -219,7 +180,7 @@ def test_jdbc_geometry_wkb_roundtrip_enrich_merge(spark, tmp_path):
         2: [(13.3777, 52.5163), (13.3791, 52.5170)],
     }
     ways = spark.createDataFrame(
-        [(gid, bytearray(encode_linestring(pts)), None) for gid, pts in geoms.items()],
+        [(gid, bytearray(_encode_linestring(pts)), None) for gid, pts in geoms.items()],
         "gid bigint, geom binary, greenery double",
     )
     try:
@@ -233,7 +194,7 @@ def test_jdbc_geometry_wkb_roundtrip_enrich_merge(spark, tmp_path):
     # read → decode the typed geometry → enrich
     back = (
         spark.read.format("jdbc").options(**opts).option("dbtable", "ways").load()
-        .withColumn("geom_pts", wkb_to_geom_col("geom"))
+        .withColumn("geom_pts", _wkb_to_geom_col("geom"))
     )
     enriched = back.select(
         "gid", "geom", (linestring_length_m("geom_pts") / 1000.0).alias("greenery")
@@ -251,7 +212,7 @@ def test_jdbc_geometry_wkb_roundtrip_enrich_merge(spark, tmp_path):
     assert set(rows) == {1, 2}
     for gid, pts in geoms.items():
         # geometry survives the JDBC BLOB round trip bit-exactly
-        assert decode_linestring(bytes(rows[gid].geom)) == pts
+        assert _decode_linestring(bytes(rows[gid].geom)) == pts
         assert rows[gid].greenery is not None and rows[gid].greenery > 0.0
 
 
@@ -268,11 +229,6 @@ def test_jdbc_null_geometry_and_multibatch_upsert(spark, tmp_path):
     import pytest
 
     from ariadne_cartograph_spark.functions.geometry import linestring_length_m
-    from ariadne_cartograph_spark.functions.wkb import (
-        decode_linestring,
-        encode_linestring,
-        wkb_to_geom_col,
-    )
     from ariadne_cartograph_spark.operators.merge import merge_into
 
     cfg = {
@@ -289,7 +245,7 @@ def test_jdbc_null_geometry_and_multibatch_upsert(spark, tmp_path):
             None
             if gid % 5 == 0  # clipped ways: geometry legitimately NULL
             else bytearray(
-                encode_linestring(
+                _encode_linestring(
                     [(gid * 1e-3, 1.0), (gid * 1e-3, 1.0 + 1e-3)]
                 )
             ),
@@ -315,7 +271,7 @@ def test_jdbc_null_geometry_and_multibatch_upsert(spark, tmp_path):
     assert back.count() == n
 
     # enrich only even gids (partial-run ON CONFLICT shape) + 50 inserts
-    decoded = back.withColumn("geom_pts", wkb_to_geom_col("geom"))
+    decoded = back.withColumn("geom_pts", _wkb_to_geom_col("geom"))
     updates = (
         decoded.filter(F.col("gid") % 2 == 0)
         .select("gid", (linestring_length_m("geom_pts") / 1000.0).alias("greenery"))
@@ -344,7 +300,7 @@ def test_jdbc_null_geometry_and_multibatch_upsert(spark, tmp_path):
         elif gid % 2 == 0:
             assert r.greenery is not None and r.greenery > 0.0
             # geometry untouched by the metadata-only upsert, bit-exact
-            assert decode_linestring(bytes(r.geom))[0][0] == gid * 1e-3
+            assert _decode_linestring(bytes(r.geom))[0][0] == gid * 1e-3
         else:
             # unmatched column run: not nulled, not invented
             assert r.greenery is None and r.geom is not None

@@ -204,9 +204,7 @@ def test_first_match_precedence():
 def test_roundtrip_through_file(tmp_path):
     p = tmp_path / "mapconfig.xml"
     p.write_text(DEFAULT_MAPCONFIG_XML)
-    from ariadne_cartograph_spark.sources.mapconfig import load_mapconfig
-
-    assert load_mapconfig(str(p)) == default_mapconfig()
+    assert parse_mapconfig(p.read_text(encoding="utf-8")) == default_mapconfig()
 
 
 def test_way_maxspeed_parsing(spark):

@@ -90,3 +90,23 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 0
     assert set(se.oracle_sql()) <= set(se.queries())
+
+
+def test_sweep_isolates_an_entry_that_raises_while_planning(spark, sf_dir, monkeypatch):
+    """An entry whose plan build raises fails in its own ParityReport;
+    the sweep still reports the entries after it."""
+    from ariadne_cartograph_spark.plans.catalog import CatalogEntry
+    from ariadne_cartograph_spark.plans.oracle_harness import run_catalog_parity
+
+    def raises(spark, sf_dir):
+        raise RuntimeError("plan build failed")
+
+    def one_row(spark, sf_dir):
+        return spark.createDataFrame([(1,)], "x int")
+
+    monkeypatch.setitem(REGISTRY, "aa_raises", CatalogEntry("aa_raises", raises, "SELECT 1 AS x"))
+    monkeypatch.setitem(REGISTRY, "ab_one_row", CatalogEntry("ab_one_row", one_row, "SELECT 1 AS x"))
+    reports = {r.name: r for r in run_catalog_parity(spark, sf_dir, ["aa_raises", "ab_one_row"])}
+    assert not reports["aa_raises"].ok
+    assert reports["aa_raises"].error == "RuntimeError: plan build failed"
+    assert reports["ab_one_row"].ok, reports["ab_one_row"].describe()

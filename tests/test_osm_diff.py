@@ -180,69 +180,6 @@ def test_affected_relation_ids(base, diff, spark):
         affected_relation_ids(d2, relations=relations, index=idx)
 
 
-def test_replication_pipeline_exactly_once(base, spark, tmp_path, osc_path):
-    """End-to-end replication: two sequential changesets maintained
-    into a bucketed ParquetMergeTable via blast-radius recompute; the
-    final table equals a full rebuild of the final patched state, and
-    replaying a changeset (same osmosis sequence number) is a no-op."""
-    from ariadne_cartograph_spark.operators.merge import ParquetMergeTable
-    from ariadne_cartograph_spark.sources.osm_diff import replicate_derived_ways
-
-    def derive(geoms):
-        # way-keyed derived rows: vertex count + 1e7-quantized centroid
-        return geoms.select(
-            "id",
-            F.size("geom").alias("n_pts"),
-            F.round(
-                F.aggregate("geom", F.lit(0.0), lambda a, p: a + p["lng"])
-                / F.size("geom") * 1e7
-            ).cast("long").alias("cx_e7"),
-        )
-
-    table = ParquetMergeTable(spark, str(tmp_path / "lines"), key="id", n_buckets=8)
-    patched0 = split_elements(base)
-    table.upsert(derive(assemble_way_geometries(patched0["nodes"], patched0["ways"])))
-
-    # changeset 1: the module fixture (moves/retag/create)
-    d1 = read_osc_elements(spark, osc_path).localCheckpoint(eager=True)
-    el1 = apply_osc(base, d1).localCheckpoint(eager=True)
-    p1 = split_elements(el1)
-    stats1 = replicate_derived_ways(
-        table, p1["nodes"], p1["ways"], d1, derive, txn_version=1
-    )
-    assert stats1["upserted"] == 3 and stats1["deleted"] == 0
-
-    # changeset 2: delete the retagged way
-    osc2 = f"""<osmChange version="0.6">
-      <delete><way id="{RETAGGED_WAY}" version="3"/></delete>
-    </osmChange>"""
-    p2_path = tmp_path / "c2.osc"
-    p2_path.write_text(osc2)
-    d2 = read_osc_elements(spark, str(p2_path)).localCheckpoint(eager=True)
-    el2 = apply_osc(el1, d2).localCheckpoint(eager=True)
-    p2 = split_elements(el2)
-    stats2 = replicate_derived_ways(
-        table, p2["nodes"], p2["ways"], d2, derive, txn_version=2
-    )
-    assert stats2["deleted"] == 1
-
-    # final table == full rebuild of the final patched state
-    want = {
-        (r.id, r.n_pts, r.cx_e7)
-        for r in derive(assemble_way_geometries(p2["nodes"], p2["ways"])).collect()
-    }
-    got = {(r.id, r.n_pts, r.cx_e7) for r in table.read().collect()}
-    assert got == want
-    assert not any(r[0] == RETAGGED_WAY for r in got)
-    assert any(r[0] == NEW_WAY for r in got)
-
-    # replaying changeset 2 is skipped by the txn marks: same content
-    v_before = table._current()[0]
-    replicate_derived_ways(table, p2["nodes"], p2["ways"], d2, derive, txn_version=2)
-    assert {(r.id, r.n_pts, r.cx_e7) for r in table.read().collect()} == want
-    assert table._current()[0] == v_before  # no new versions committed
-
-
 @pytest.mark.slow
 def test_streaming_osc_replication(base, spark, tmp_path):
     """Continuous replication: a file stream of .osc changesets drained
@@ -400,30 +337,6 @@ def test_multi_file_osc_ordering_is_by_file_name(base, spark, tmp_path):
     assert net2[("node", nid)] == "create"
     got = apply_osc(base, diff2).filter(F.col("id") == nid).collect()
     assert len(got) == 1 and got[0].lat == pytest.approx(34.15)
-
-
-def test_replicate_derived_ways_unmarked_path(base, spark, tmp_path, osc_path):
-    """Default arguments (no txn_version) must run UNMARKED — not crash
-    on a half-given (txn_app, None) mark pair."""
-    from ariadne_cartograph_spark.operators.merge import ParquetMergeTable
-    from ariadne_cartograph_spark.sources.osm_diff import replicate_derived_ways
-
-    def derive(geoms):
-        return geoms.select("id", F.size("geom").alias("n_pts"))
-
-    table = ParquetMergeTable(spark, str(tmp_path / "lines"), key="id", n_buckets=4)
-    p0 = split_elements(base)
-    table.upsert(derive(assemble_way_geometries(p0["nodes"], p0["ways"])))
-
-    d1 = read_osc_elements(spark, osc_path).localCheckpoint(eager=True)
-    p1 = split_elements(apply_osc(base, d1).localCheckpoint(eager=True))
-    stats = replicate_derived_ways(table, p1["nodes"], p1["ways"], d1, derive)
-    assert stats == {"upserted": 3, "deleted": 0}
-    want = {
-        (r.id, r.n_pts)
-        for r in derive(assemble_way_geometries(p1["nodes"], p1["ways"])).collect()
-    }
-    assert {(r.id, r.n_pts) for r in table.read().collect()} == want
 
 
 @pytest.mark.slow

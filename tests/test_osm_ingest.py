@@ -7,11 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ariadne_cartograph_spark.functions.geometry import (
-    geojson_to_linestring,
-    is_closed_ring,
-    linestring_to_geojson,
-)
+from ariadne_cartograph_spark.functions.geometry import is_closed_ring
 from ariadne_cartograph_spark.sources.osm import (
     assemble_way_geometries,
     derive_feature_tables,
@@ -171,24 +167,6 @@ def test_open_uri_guard():
 
     with pytest.raises(NotImplementedError):
         _open_uri("s3://bucket/planet.osm")
-
-
-def test_geojson_roundtrip(tables, spark):
-    g = assemble_way_geometries(tables["nodes"], tables["ways"]).filter(
-        F.col("geom").isNotNull() & (F.size("geom") >= 2)
-    ).limit(20)
-    rt = g.select(
-        "id",
-        "geom",
-        geojson_to_linestring(linestring_to_geojson("geom")).alias("geom2"),
-    )
-    bad = rt.filter(
-        F.size(F.col("geom")) != F.size(F.col("geom2"))
-    ).count()
-    assert bad == 0
-    row = rt.limit(1).collect()[0]
-    for p, q in zip(row.geom, row.geom2):
-        assert abs(p.lng - q.lng) < 1e-9 and abs(p.lat - q.lat) < 1e-9
 
 
 def test_feature_tables(tables):

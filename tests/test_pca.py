@@ -137,50 +137,3 @@ def test_streaming_gram_equals_batch_gram(spark, tmp_path):
         stage = str(tmp_path / f"stage{n_files}")
         df.repartition(n_files).write.mode("overwrite").parquet(stage)
         assert streaming_gram(spark, stage) == batch_G
-
-
-@pytest.mark.slow
-def test_streaming_gram_survives_mid_stream_crash(spark, tmp_path):
-    """r12 verdict task #7: a batch crash AFTER its partial is written
-    but BEFORE the commit — resume from the same checkpoint replays the
-    batch (same id, same offsets), the overwrite keeps accumulation
-    exactly-once, and the folded store equals the offline Gram
-    bit-exactly (so the trained direction and every projection match)."""
-    import pyspark.sql.functions as F
-
-    from ariadne_cartograph_spark.streaming.pca import (
-        read_gram_store,
-        streaming_gram_durable,
-    )
-
-    rng = np.random.RandomState(21)
-    X = rng.randn(160, 8).astype(np.float32) * 0.3
-    rows = [(i, 0, [float(v) for v in x]) for i, x in enumerate(X)]
-    df = spark.createDataFrame(rows, "vec_id long, label int, embedding array<float>")
-    offline_G = gram_matrix(
-        df.select(quantize_vec(F.col("embedding")).alias("q")), "q"
-    )
-
-    stage = str(tmp_path / "stage_crash")
-    df.repartition(4).write.mode("overwrite").parquet(stage)
-    gram_dir = str(tmp_path / "gram_store")
-    ckpt = str(tmp_path / "ckpt")
-
-    with pytest.raises(Exception, match="injected crash"):
-        streaming_gram_durable(spark, stage, gram_dir, ckpt, fail_at_batch=2)
-    # the crashed batch's partial IS on disk — the dangerous state
-    import os
-    assert os.path.isdir(os.path.join(gram_dir, "batch_id=2"))
-    partial_mid = read_gram_store(spark, gram_dir)
-    assert partial_mid != offline_G  # stream genuinely interrupted
-
-    # resume from the same checkpoint: batch 2 replays (overwrite, not
-    # double-count), batch 3 runs, and the total is exactly offline
-    streaming_gram_durable(spark, stage, gram_dir, ckpt)
-    assert read_gram_store(spark, gram_dir) == offline_G
-
-    from ariadne_cartograph_spark.operators.pca import power_iteration
-
-    assert power_iteration(read_gram_store(spark, gram_dir)) == power_iteration(
-        offline_G
-    )

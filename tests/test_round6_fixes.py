@@ -225,7 +225,14 @@ def test_lang_scores_contains_equals_bigram_intersect(spark):
     ]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, text string")
     # the pre-round-6 formula, inlined: distinct bigram array ∩ profile
-    grams = T.char_ngrams(F.lower(F.col("text")), 2)
+    t = F.lower(F.col("text"))
+    k = F.length(t) - 1
+    grams = F.array_distinct(
+        F.when(
+            k >= 1,
+            F.transform(F.sequence(F.lit(1), F.greatest(k, F.lit(1))), lambda i: F.substring(t, i, F.lit(2))),
+        ).otherwise(F.array().cast("array<string>"))
+    )
     old_cols = [
         (F.size(F.array_intersect(grams, F.array(*[F.lit(x) for x in prof])))
          .cast("double") / len(prof)).alias(f"old_{lang}")

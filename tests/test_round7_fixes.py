@@ -10,7 +10,12 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from ariadne_cartograph_spark.operators import probe_memo
 from ariadne_cartograph_spark.operators import similarity as S
+
+
+def _pair_count_keys():
+    return [k for k in probe_memo._MEMO if k[0] == "pair_counts"]
 
 
 @pytest.fixture()
@@ -23,21 +28,21 @@ def emb(spark):
 
 
 def test_pair_counts_single_job_and_memo(spark, emb):
-    S._PAIR_COUNT_CACHE.clear()
+    probe_memo._MEMO.clear()
     q = emb.filter(F.col("vec_id") < 3)
     assert S._pair_counts(emb, q) == (40, 3)
-    assert len(S._PAIR_COUNT_CACHE) == 1
+    assert len(_pair_count_keys()) == 1
     # second call with SEMANTICALLY identical (rebuilt) plans must hit
     # the memo: poison the cached value and observe it coming back
-    key = next(iter(S._PAIR_COUNT_CACHE))
-    S._PAIR_COUNT_CACHE[key] = (123, 456)
+    (key,) = _pair_count_keys()
+    probe_memo._MEMO[key] = (123, 456)
     q2 = emb.filter(F.col("vec_id") < 3)
     assert S._pair_counts(emb, q2) == (123, 456)
-    S._PAIR_COUNT_CACHE.clear()
+    probe_memo._MEMO.clear()
     # a semantically different query plan is a different key
     q3 = emb.filter(F.col("vec_id") < 5)
     assert S._pair_counts(emb, q3) == (40, 5)
-    S._PAIR_COUNT_CACHE.clear()
+    probe_memo._MEMO.clear()
 
 
 def test_merge_table_concurrent_writers_lose_no_update(spark, tmp_path):
@@ -188,19 +193,19 @@ def test_route_topk_footer_fast_paths(spark):
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     n = emb.count()
-    S._PAIR_COUNT_CACHE.clear()
+    probe_memo._MEMO.clear()
     # exact×exact: decide either way with no job (cache stays empty)
     assert S._route_topk(emb, emb, n * n + 1) == "crossjoin"
     assert S._route_topk(emb, emb, n * n) == "blocked"
-    assert len(S._PAIR_COUNT_CACHE) == 0
+    assert len(_pair_count_keys()) == 0
     # ub×ub below threshold: filter side has only a bound, still no job
     filt = emb.filter(F.col("vec_id") < 5)
     assert S._route_topk(emb, filt, n * n + 1) == "crossjoin"
-    assert len(S._PAIR_COUNT_CACHE) == 0
+    assert len(_pair_count_keys()) == 0
     # ambiguous (bound straddles): falls back to the memoized count job
     assert S._route_topk(emb, filt, n * 5 + 1) == "crossjoin"
-    assert len(S._PAIR_COUNT_CACHE) == 1
-    S._PAIR_COUNT_CACHE.clear()
+    assert len(_pair_count_keys()) == 1
+    probe_memo._MEMO.clear()
 
 
 @pytest.mark.slow
@@ -268,12 +273,12 @@ def test_queries_count_hint_jobless_and_exact(spark):
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     q = emb.filter(F.col("vec_id") == 0)
-    S._PAIR_COUNT_CACHE.clear()
+    probe_memo._MEMO.clear()
     hinted = S.cosine_topk(
         emb, q, "vec_id", "embedding", k=5, query_id_col=None,
         queries_count_hint=1,
     ).collect()
-    assert len(S._PAIR_COUNT_CACHE) == 0  # no probe job ran
+    assert len(_pair_count_keys()) == 0  # no probe job ran
     explicit = S.cosine_topk(
         emb, q, "vec_id", "embedding", k=5, query_id_col=None,
         strategy="crossjoin",
@@ -285,20 +290,20 @@ def test_queries_count_hint_jobless_and_exact(spark):
         queries_count_hint=10**9,
     ).collect()
     assert sorted(map(tuple, wrong)) == sorted(map(tuple, explicit))
-    S._PAIR_COUNT_CACHE.clear()
+    probe_memo._MEMO.clear()
 
 
 def test_auto_route_unchanged_by_memo(spark, emb):
     """The gate still routes exactly as before: below threshold →
     crossjoin result identical to the explicit-strategy run."""
-    S._PAIR_COUNT_CACHE.clear()
+    probe_memo._MEMO.clear()
     q = emb.filter(F.col("vec_id") == 0)
     auto = S.cosine_topk(emb, q, "vec_id", "embedding", k=5).collect()
     explicit = S.cosine_topk(
         emb, q, "vec_id", "embedding", k=5, strategy="crossjoin"
     ).collect()
     assert sorted(map(tuple, auto)) == sorted(map(tuple, explicit))
-    S._PAIR_COUNT_CACHE.clear()
+    probe_memo._MEMO.clear()
 
 
 def test_rolling_fingerprint_fold_edges_match_python(spark):

@@ -130,7 +130,6 @@ def test_weighted_routing_with_class_costs(spark, topo_edges):
     seconds from the highway class carried onto every edge, oneway →
     reverse_cost -1) vs a pure-Python Dijkstra on the same cost table —
     the osm2pgrouting cost/reverse_cost consumption path."""
-    from ariadne_cartograph_spark.operators.routing import cost_adjacency
     from ariadne_cartograph_spark.operators.topology import edge_costs
 
     ec = edge_costs(topo_edges).localCheckpoint(eager=True)
@@ -160,205 +159,20 @@ def test_weighted_routing_with_class_costs(spark, topo_edges):
                 dist[v] = nd
                 heapq.heappush(pq, (nd, v))
 
-    got = {
-        r.node_id: r.dist
-        for r in shortest_paths(cost_adjacency(ec), [src], max_iter=60).collect()
-    }
+    # directed arcs: forward at cost_s, backward only where
+    # reverse_cost_s >= 0 (pgRouting's -1 marks a oneway edge)
+    adj = ec.select(
+        F.col("source").alias("u"), F.col("target").alias("v"), F.col("cost_s").alias("w")
+    ).unionByName(
+        ec.filter(F.col("reverse_cost_s") >= 0).select(
+            F.col("target").alias("u"),
+            F.col("source").alias("v"),
+            F.col("reverse_cost_s").alias("w"),
+        )
+    )
+    got = {r.node_id: r.dist for r in shortest_paths(adj, [src], max_iter=60).collect()}
     assert set(got) == set(dist)
     for k, v in dist.items():
-        assert got[k] == pytest.approx(v, abs=1e-6), k
-
-
-def _mini_arcs(spark, segs):
-    """Bidirectional unit-cost arc table from (gid, way_id, u, v)."""
-    rows = []
-    for gid, way, u, v in segs:
-        rows.append((gid * 2, gid, way, u, v, 1.0))
-        rows.append((gid * 2 + 1, gid, way, v, u, 1.0))
-    return spark.createDataFrame(
-        rows, "arc_id long, gid long, way_id long, u long, v long, w double"
-    )
-
-
-def _restr(spark, rows):
-    return spark.createDataFrame(
-        rows, "relation_id long, restriction string, from_way long, "
-        "via_node long, to_way long"
-    )
-
-
-def _run(arcs, restr, src, max_iter=20):
-    from ariadne_cartograph_spark.operators.routing import (
-        restricted_shortest_paths,
-    )
-
-    return {
-        r.node_id: (r.dist, r.hops)
-        for r in restricted_shortest_paths(arcs, restr, [src], max_iter).collect()
-    }
-
-
-#   1 --gid1/way100-- 2 --gid2/way200-- 3
-#                     |                 |
-#                 gid3/way300       gid4/way400
-#                     |                 |
-#                     4 ----------------+
-_DIAMOND = [(1, 100, 1, 2), (2, 200, 2, 3), (3, 300, 2, 4), (4, 400, 4, 3)]
-
-
-def test_no_turn_forces_detour(spark):
-    """no_left_turn (way100 → way200 via node 2): node 3 must be
-    reached around the block (3 hops), node 4 unaffected."""
-    arcs = _mini_arcs(spark, _DIAMOND)
-    unres = _run(arcs, _restr(spark, []), 1)
-    assert unres[3] == (2.0, 2) and unres[4] == (2.0, 2)
-    res = _run(
-        arcs, _restr(spark, [(1, "no_left_turn", 100, 2, 200)]), 1
-    )
-    assert res[3] == (3.0, 3)  # 1-2-4-3
-    assert res[4] == (2.0, 2)  # untouched
-
-
-def test_only_turn_bans_everything_else(spark):
-    """only_straight_on (way100 via 2 → way200): way300 departure is
-    illegal, node 4 reached through 3."""
-    arcs = _mini_arcs(spark, _DIAMOND)
-    res = _run(
-        arcs, _restr(spark, [(1, "only_straight_on", 100, 2, 200)]), 1
-    )
-    assert res[3] == (2.0, 2)
-    assert res[4] == (3.0, 3)  # 1-2-3-4
-
-
-def test_u_turn_reversal_semantics(spark):
-    """from_way == to_way means "don't reverse onto the same segment",
-    not "don't continue on the same way": an only_ trap makes the
-    u-turn optimal (allowed without the restriction, node 4 reachable);
-    adding no_u_turn at the trap's end makes node 4 unreachable."""
-    # 1 -100- 2 -200- 3 ;  2 -300- 4 ; only way200 after way100 at 2
-    segs = [(1, 100, 1, 2), (2, 200, 2, 3), (3, 300, 2, 4)]
-    arcs = _mini_arcs(spark, segs)
-    only = [(1, "only_straight_on", 100, 2, 200)]
-    res = _run(arcs, _restr(spark, only), 1)
-    # 1-2-3, reverse 3-2 on gid2 (u-turn at 3), 2-4 — arriving on
-    # way200 at node 2 the only_ no longer applies
-    assert res[4] == (4.0, 4)
-    res_ut = _run(
-        arcs,
-        _restr(spark, only + [(2, "no_u_turn", 200, 3, 200)]),
-        1,
-    )
-    assert 4 not in res_ut
-    assert res_ut[3] == (2.0, 2)
-
-
-def test_straight_through_same_way_not_banned_by_uturn(spark):
-    """A way continuing through the via node: no_u_turn must NOT ban
-    continuing straight on the same way (distinct segment, same way)."""
-    # 1 -gid1/way100- 2 -gid2/way100- 3  (one way split at node 2)
-    segs = [(1, 100, 1, 2), (2, 100, 2, 3)]
-    arcs = _mini_arcs(spark, segs)
-    res = _run(arcs, _restr(spark, [(1, "no_u_turn", 100, 2, 100)]), 1)
-    assert res[3] == (2.0, 2)  # straight through is legal
-    # but reversing at 2 back onto gid1 is not: node 1 only as source
-
-
-@pytest.mark.slow
-def test_fixture_restricted_matches_python_linegraph_dijkstra(
-    spark, topo_edges
-):
-    """Full-fixture parity: restricted_shortest_paths vs an independent
-    pure-Python edge-based Dijkstra implementing the same OSM
-    restriction semantics over the same arc table, sourced next to the
-    no_left_turn via so restrictions genuinely engage."""
-    from ariadne_cartograph_spark.operators.routing import (
-        arc_table,
-        restricted_shortest_paths,
-    )
-    from ariadne_cartograph_spark.operators.topology import (
-        edge_costs,
-        extract_turn_restrictions,
-    )
-
-    t = split_elements(read_osm_elements(spark, OSM_PATH))
-    restr_df = extract_turn_restrictions(t["relations"]).localCheckpoint(
-        eager=True
-    )
-    arcs = arc_table(edge_costs(topo_edges)).localCheckpoint(eager=True)
-    arc_rows = arcs.collect()
-    restr = restr_df.collect()
-
-    # source: tail of an arc on the no_left_turn's from_way (261918653)
-    src = min(
-        r.u for r in arc_rows if r.way_id == 261918653
-    )
-
-    out_arcs = defaultdict(list)
-    for a in arc_rows:
-        out_arcs[a.u].append(a)
-    no_way = {
-        (r.from_way, r.via_node, r.to_way)
-        for r in restr
-        if r.restriction.startswith("no_") and r.from_way != r.to_way
-    }
-    no_ut = {
-        (r.from_way, r.via_node)
-        for r in restr
-        if r.restriction.startswith("no_") and r.from_way == r.to_way
-    }
-    only = {
-        (r.from_way, r.via_node): r.to_way
-        for r in restr
-        if r.restriction.startswith("only_")
-    }
-
-    def py_linegraph(use_restrictions):
-        dist = {}
-        pq = []
-        for a in out_arcs[src]:
-            if a.w < dist.get(a.arc_id, math.inf):
-                dist[a.arc_id] = a.w
-                heapq.heappush(pq, (a.w, a.arc_id, a))
-        while pq:
-            d, aid, a = heapq.heappop(pq)
-            if d > dist.get(aid, math.inf):
-                continue
-            for b in out_arcs[a.v]:
-                if use_restrictions:
-                    if (a.way_id, a.v, b.way_id) in no_way:
-                        continue
-                    if (a.way_id, a.v) in no_ut and b.gid == a.gid:
-                        continue
-                    o = only.get((a.way_id, a.v))
-                    if o is not None and b.way_id != o:
-                        continue
-                nd = d + b.w
-                if nd < dist.get(b.arc_id, math.inf) - 1e-12:
-                    dist[b.arc_id] = nd
-                    heapq.heappush(pq, (nd, b.arc_id, b))
-        node = {src: 0.0}
-        head = {a.arc_id: a.v for a in arc_rows}
-        for aid, dd in dist.items():
-            v = head[aid]
-            if dd < node.get(v, math.inf):
-                node[v] = dd
-        return node
-
-    want = py_linegraph(True)
-    base = py_linegraph(False)
-    # the restrictions must actually change something from this source
-    assert any(
-        abs(want[k] - base.get(k, math.inf)) > 1e-9 for k in want
-    )
-
-    got = {
-        r.node_id: r.dist
-        for r in restricted_shortest_paths(
-            arcs, restr_df, [src], max_iter=80
-        ).collect()
-    }
-    assert set(got) == set(want)
-    for k, v in want.items():
         assert got[k] == pytest.approx(v, abs=1e-6), k
 
 
@@ -417,61 +231,6 @@ def test_cost_matrix_census_literals(spark, edge_list):
         assert (
             len(b), sum(b.values()), sum(k * v for k, v in b.items())
         ) == want[s], s
-
-
-@pytest.mark.slow
-def test_tracked_route_reconstruction(spark, topo_edges):
-    """pgr_dijkstra returns routes, not just costs: the tracked
-    relaxation + batched backward walk must yield connected,
-    cost-consistent paths whose totals equal the untracked dists."""
-    from ariadne_cartograph_spark.operators.routing import (
-        reconstruct_paths,
-        shortest_paths_tracked,
-    )
-    from ariadne_cartograph_spark.operators.topology import edge_costs
-
-    ec = edge_costs(topo_edges).localCheckpoint(eager=True)
-    # directed cost adjacency carrying gid for route output
-    fwd = ec.select(
-        F.col("source").alias("u"), F.col("target").alias("v"),
-        F.col("cost_s").alias("w"), F.col("gid").alias("edge_id"),
-    )
-    rev = ec.filter(F.col("reverse_cost_s") >= 0).select(
-        F.col("target").alias("u"), F.col("source").alias("v"),
-        F.col("reverse_cost_s").alias("w"), F.col("gid").alias("edge_id"),
-    )
-    adj = fwd.unionByName(rev).localCheckpoint(eager=True)
-    rows = ec.select("gid", "source", "target", "cost_s", "reverse_cost_s").collect()
-    src = min(min(r.source, r.target) for r in rows)
-
-    tracked = shortest_paths_tracked(adj, [src], max_iter=40).localCheckpoint(
-        eager=True
-    )
-    t_rows = {r.node_id: r for r in tracked.collect()}
-    # pick 3 reached targets at different depths
-    by_hops = sorted(t_rows.values(), key=lambda r: (r.hops, r.node_id))
-    targets = [by_hops[1].node_id, by_hops[len(by_hops) // 2].node_id,
-               by_hops[-1].node_id]
-    paths = reconstruct_paths(tracked, targets)
-    got = {}
-    for r in paths.collect():
-        got.setdefault(r.target, []).append(r)
-    edge_w = {}
-    for r in rows:
-        edge_w[(r.gid, r.source, r.target)] = r.cost_s
-        if r.reverse_cost_s >= 0:
-            edge_w[(r.gid, r.target, r.source)] = r.reverse_cost_s
-    for tgt in targets:
-        seq = sorted(got[tgt], key=lambda r: r.seq)
-        assert seq[0].node_id == src and seq[0].agg_cost == 0.0
-        assert seq[0].arrived_by_edge is None
-        assert seq[-1].node_id == tgt
-        # agg_cost at the target equals the untracked dist
-        assert seq[-1].agg_cost == pytest.approx(t_rows[tgt].dist, abs=1e-9)
-        for a, b in zip(seq, seq[1:]):
-            assert b.seq == a.seq + 1
-            w = edge_w[(b.arrived_by_edge, a.node_id, b.node_id)]
-            assert b.agg_cost == pytest.approx(a.agg_cost + w, abs=1e-9)
 
 
 def test_pagerank_directed_sinks_get_rank(spark):

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from ariadne_cartograph_spark.operators.sampling import importance_resample
 from ariadne_cartograph_spark.operators.sketch import (
     heavy_hitters_topk,
-    mg_error_bound,
     mg_partials,
 )
 
@@ -49,7 +48,9 @@ def test_mg_candidates_contain_all_heavy_tokens(spark):
     from collections import Counter
 
     true = Counter(toks)
-    bound = mg_error_bound(len(toks), cap, 8)
+    # merged-summary undercount bound n/(m+1), independent of the
+    # partition count (errors add, but so do the per-partition n's)
+    bound = len(toks) / (cap + 1)
     heavy = {t for t, c in true.items() if c > bound}
     assert heavy, "test corpus produced no heavy tokens — tighten params"
     assert heavy <= cands, f"missing heavy tokens: {heavy - cands}"

@@ -7,7 +7,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from ariadne_cartograph_spark.operators.skew import salted_agg, salted_join
+from ariadne_cartograph_spark.operators.skew import salted_agg
 
 
 def _skewed_df(spark):
@@ -57,28 +57,6 @@ def test_salted_agg_spreads_hot_key(spark):
         .count()
     )
     assert phase1_groups == 8  # the hot key really fans out
-
-
-def test_salted_join_matches_plain(spark):
-    big = _skewed_df(spark)
-    small = spark.createDataFrame(
-        [("hot", 1.5), ("k1", 2.0), ("k7", 3.0)], "k string, w double"
-    )
-    plain = big.join(small, ["k"]).groupBy("k").agg(
-        F.round(F.sum(F.col("v") * F.col("w")), 6).alias("t")
-    )
-    salted = salted_join(big, small, ["k"], n_salts=8).groupBy("k").agg(
-        F.round(F.sum(F.col("v") * F.col("w")), 6).alias("t")
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_salted_join_left_keeps_unmatched(spark):
-    big = _skewed_df(spark)
-    small = spark.createDataFrame([("hot", 1.5)], "k string, w double")
-    out = salted_join(big, small, ["k"], how="left", n_salts=4)
-    assert out.count() == big.count()
-    assert out.filter(F.col("k") != "hot").filter(F.col("w").isNotNull()).count() == 0
 
 
 @pytest.mark.slow

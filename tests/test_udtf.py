@@ -1,13 +1,34 @@
-"""Python UDTF surface (U3): the row-at-a-time chunker UDTF must emit
-exactly what the production column-math chunker plan emits."""
+"""Python UDTF surface (U3): a row-at-a-time chunker UDTF, the
+reference implementation of the chunk formula, must emit exactly what
+the production column-math chunker plan
+(plans/text_queries.text_chunking) emits."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import math
+import re
+
+from pyspark.sql.functions import udtf
+
+
+@udtf(returnType="chunk_idx int, chunk_tokens bigint, chunk_text string")
+class ChunkDoc:
+    """Overlapping fixed-size token windows for one document: chunk i
+    covers tokens [i*stride, i*stride + size); n_chunks =
+    max(ceil((n - size)/stride) + 1, 1)."""
+
+    def eval(self, text: str, size: int, stride: int):
+        # re.split(r"\s+") matches Spark's F.split(text, r"\s+")
+        # exactly, including the leading-empty-token and empty-string
+        # edge cases.
+        toks = re.split(r"\s+", text or "")
+        n_chunks = max(math.ceil((len(toks) - size) / stride) + 1, 1)
+        for i in range(n_chunks):
+            chunk = toks[i * stride : i * stride + size]
+            yield i, len(chunk), " ".join(chunk)
 
 
 def test_udtf_chunker_matches_column_math_chunker(spark):
-    from ariadne_cartograph_spark.operators.udtfs import ChunkDoc
     from ariadne_cartograph_spark.plans.text_queries import (
         _CHUNK_SIZE,
         _CHUNK_STRIDE,
@@ -34,8 +55,6 @@ def test_udtf_chunker_matches_column_math_chunker(spark):
 
 
 def test_udtf_chunker_edge_cases(spark):
-    from ariadne_cartograph_spark.operators.udtfs import ChunkDoc
-
     spark.udtf.register("chunk_doc_e", ChunkDoc)
     df = spark.createDataFrame(
         [(1, "one two three"), (2, "")], ["id", "text"]
