@@ -20,12 +20,16 @@ becomes co-located.
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import shutil
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 
 def merge_into(
@@ -59,6 +63,38 @@ def merge_into(
         if c not in existing.columns:
             out_cols.append(F.col(f"u.{c}").alias(c))
     return joined.select(*out_cols)
+
+
+# Logical plan nodes that re-read one leaf without joining, aggregating or
+# calling Python: evaluating such a frame twice costs two cheap scans.
+_SCAN_NODES = frozenset(
+    {"Project", "Filter", "LogicalRDD", "LocalRelation", "Relation", "Range"}
+)
+
+
+def _read_once(df: DataFrame) -> DataFrame:
+    """``df`` materialised, unless evaluating it again only re-reads one
+    checkpoint, local relation or file scan through projections and
+    filters. The bucketed paths read their input twice (the bucket
+    census, then the merge, join or semi-join), so a caller's lazy
+    lineage must run once, not twice."""
+    tree = df._jdf.queryExecution().optimizedPlan().treeString()
+    nodes = set(re.findall(r"^[\s:+\-|]*(\w+)", tree, re.M))
+    return df if nodes <= _SCAN_NODES else df.localCheckpoint(eager=False)
+
+
+def _schema_union(old: StructType | None, new: StructType | None) -> StructType | None:
+    """The table schema after writing a frame of schema ``new``: old
+    columns in order (typed as ``new`` types them, since a merge widens),
+    then the columns ``new`` adds."""
+    if old is None or new is None:
+        return new if old is None else old
+    by_name = {f.name: f for f in new.fields}
+    have = set(old.fieldNames())
+    return StructType(
+        [by_name.get(f.name, f) for f in old.fields]
+        + [f for f in new.fields if f.name not in have]
+    )
 
 
 class ParquetMergeTable:
@@ -101,19 +137,28 @@ class ParquetMergeTable:
 
     Layout: a committed snapshot is a JSON **manifest** listing the
     immutable data directories that make it up — never the directories
-    themselves. With ``n_buckets=None`` (default) each commit writes
+    themselves. Its fields: ``version``; ``n_buckets``; ``data`` (the
+    data relpaths); ``buckets`` (bucket id → relpath); ``txn`` (app →
+    high-water batch id); ``stats`` (relpath → per-column file stats);
+    and ``schema``, the table schema as Spark JSON. Every scan reads
+    with that schema, so no read runs Spark's footer-inference job, and
+    buckets written before a column was added read it as NULL. Keys are
+    cast to the schema's key type before they are hashed or matched.
+    With ``n_buckets=None`` (default) each commit writes
     one whole-table directory, the right plan for dimension-sized
     tables. With ``n_buckets=N`` the table is hash-bucketed on the key
     (``pmod(xxhash64(key), N)``) and an upsert is **copy-on-write at
-    bucket granularity**: only buckets that contain updated keys are
-    scanned, merged, and rewritten; every other bucket's files are
-    carried into the new manifest by reference. This is the property
+    bucket granularity**: only buckets that contain updated or deleted
+    keys are scanned, merged, and rewritten; every other bucket's files
+    are carried into the new manifest by reference. This is the property
     that makes MERGE usable at 100 TB — a small batch against a huge
     table costs O(touched buckets), not O(table), exactly like Delta
     MERGE rewriting only the files its join touched. The bucket count
     is fixed at the table's first commit (recorded in the manifest,
     authoritative thereafter) because the key→bucket map must be
-    stable across the table's lifetime.
+    stable across the table's lifetime. ``upsert(updates,
+    deletes=keys)`` applies both in one commit (a key in both frames is
+    deleted); ``delete(keys)`` is the same commit with no updates.
     """
 
     def __init__(
@@ -161,9 +206,8 @@ class ParquetMergeTable:
 
     def _current(self) -> tuple[int, str | None]:
         """(version, manifest path) of the visible snapshot; (0, None)
-        when the table is empty. The pointer target is a manifest JSON
-        (or, for tables written by the pre-manifest layout, a data dir
-        — ``_read_manifest`` adapts either)."""
+        when the table is empty. Manifests are named
+        ``m_<version>_<uuid>.json``."""
         if not os.path.exists(self._pointer):
             return 0, None
         with open(self._pointer) as f:
@@ -171,19 +215,10 @@ class ParquetMergeTable:
         d = os.path.join(self.path, name)
         if not os.path.exists(d):
             return 0, None
-        try:
-            version = int(name.split("_")[1])
-        except (IndexError, ValueError):
-            version = 1  # pre-versioning layout: treat as v1
-        return version, d
+        return int(name.split("_")[1]), d
 
     def _read_manifest(self, ref: str | None) -> dict:
-        """Normalize a snapshot reference to
-        ``{version, n_buckets, data: [relpaths], buckets: {id: rel},
-        txn: {app: ver}}``. ``ref`` may be a manifest JSON, a legacy
-        single-dir snapshot, or None (empty table)."""
-        import json as _json
-
+        """The manifest at ``ref``, or the empty table's for None."""
         if ref is None:
             return {
                 "version": 0,
@@ -192,50 +227,29 @@ class ParquetMergeTable:
                 "buckets": {},
                 "txn": {},
                 "stats": {},
-            }
-        if os.path.isdir(ref):  # pre-manifest layout: one dir = snapshot
-            txn_file = os.path.join(ref, "_txn.json")
-            txn = {}
-            if os.path.exists(txn_file):
-                with open(txn_file) as f:
-                    txn = {k: int(v) for k, v in _json.load(f).items()}
-            name = os.path.basename(ref)
-            try:
-                version = int(name.split("_")[1])
-            except (IndexError, ValueError):
-                version = 1
-            return {
-                "version": version,
-                "n_buckets": None,
-                "data": [name],
-                "buckets": {},
-                "txn": txn,
-                "stats": {},
+                "schema": None,
             }
         with open(ref) as f:
-            m = _json.load(f)
-        m.setdefault("buckets", {})
-        m.setdefault("txn", {})
-        m.setdefault("stats", {})
-        return m
+            return json.load(f)
 
-    def _read_paths(self, rels: list[str]) -> DataFrame | None:
-        """Scan the given data relpaths as one DataFrame. Multi-path
-        scans merge schemas so buckets written before a column was
-        added read it as NULL (correct: their rows never got that
-        update)."""
+    @staticmethod
+    def _schema(m: dict) -> StructType | None:
+        return None if m["schema"] is None else StructType.fromJson(m["schema"])
+
+    def _read_paths(self, m: dict, rels: list[str]) -> DataFrame | None:
+        """Scan the given data relpaths of manifest ``m`` as one
+        DataFrame with the manifest's schema: no inference job, and
+        buckets written before a column was added read it as NULL
+        (correct: their rows never got that update)."""
         if not rels:
             return None
         paths = [os.path.join(self.path, r) for r in rels]
-        reader = self.spark.read
-        if len(paths) > 1:
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*paths)
+        return self.spark.read.schema(self._schema(m)).parquet(*paths)
 
     _JSON_SCALARS = (int, float, str, bool)
 
     def _manifest_stats(
-        self, old_m: dict, new_data: list[str], dname: str, wrote: bool
+        self, old_m: dict, new_data: list[str], dname: str, written: StructType | None
     ) -> dict:
         """Per-data-file column stats for the manifest being committed.
         Surviving rels carry their old stats entry by reference; rels
@@ -247,20 +261,16 @@ class ParquetMergeTable:
         None with the true null count, which the pruner reads as
         'unknown: keep' — stats can only widen to safety, never lie.
         """
-        old = old_m.get("stats", {})
+        old = old_m["stats"]
         out = {
             r: old[r]
             for r in new_data
             if r in old and not r.startswith(f"{dname}/") and r != dname
         }
         fresh = [r for r in new_data if r.startswith(f"{dname}/") or r == dname]
-        if not wrote or not fresh or not self.stats_cols:
+        if written is None or not fresh or not self.stats_cols:
             return out
-        try:
-            df = self.spark.read.parquet(os.path.join(self.path, dname))
-        except Exception:
-            return out  # schema-less empty write (e.g. delete-all): no stats
-        cols = [c for c in self.stats_cols if c in df.columns]
+        cols = [c for c in self.stats_cols if c in written.fieldNames()]
         if not cols:
             return out
         # Sub-rel partition column: __bucket (hash COW layout) or
@@ -270,6 +280,10 @@ class ParquetMergeTable:
             (pc for pc in ("__bucket", "__cluster") if any(f"/{pc}=" in r for r in fresh)),
             None,
         )
+        schema = StructType(
+            written.fields + ([StructField(part_col, IntegerType())] if part_col else [])
+        )
+        df = self.spark.read.schema(schema).parquet(os.path.join(self.path, dname))
         aggs = [F.count(F.lit(1)).alias("__rows")]
         for c in cols:
             aggs += [
@@ -336,7 +350,8 @@ class ParquetMergeTable:
     def read(self, version: int | None = None) -> DataFrame | None:
         """Current snapshot, or time-travel to a retained ``version``
         (raises if that version was vacuumed or never committed)."""
-        return self._read_paths(self._manifest_for(version)["data"])
+        m = self._manifest_for(version)
+        return self._read_paths(m, m["data"])
 
     _PRUNE_OPS = ("=", "<", "<=", ">", ">=", "in", "is_null", "is_not_null")
 
@@ -393,7 +408,7 @@ class ParquetMergeTable:
         are always kept."""
         self._check_predicates(predicates)
         m = self._manifest_for(version)
-        stats = m.get("stats", {})
+        stats = m["stats"]
         kept, skipped = [], []
         for rel in m["data"]:
             ent = stats.get(rel, {})
@@ -445,78 +460,55 @@ class ParquetMergeTable:
             return None
         kept, _ = self.prune_report(predicates, version)
         if kept:
-            df = self._read_paths(kept)
+            df = self._read_paths(m, kept)
         else:  # everything pruned: empty frame with the table's schema
-            df = self._read_paths(m["data"]).where(F.lit(False))
+            df = self._read_paths(m, m["data"]).where(F.lit(False))
         for p in predicates:
             df = df.where(self._pred_expr(p[0], p[1], p[2] if len(p) == 3 else None))
         return df
 
-    def read_key(self, value, version: int | None = None) -> DataFrame | None:
-        """Point lookup ``key = value`` reading exactly ONE bucket —
-        the manifest's key→bucket map answers which file can hold the
-        key, so a single-row probe against a 100 TB table scans one
-        bucket's worth of data (plus one 1-row local job to evaluate
-        ``pmod(xxhash64(value), n_buckets)`` with the key column's real
-        Spark type — hash values are type-sensitive, so the literal
-        must be cast before hashing, never guessed driver-side).
-        Falls back to a filtered full scan for unbucketed layouts."""
-        m = self._manifest_for(version)
-        if not m["data"]:
-            return None
-        n_b = m["n_buckets"]
-        if n_b is None or not m["buckets"]:
-            return self.read(version).where(F.col(self.key) == F.lit(value))
-        dtype = self._read_paths([m["data"][0]]).schema[self.key].dataType
-        lit = F.lit(value).cast(dtype)
-        b = (
-            self.spark.range(1)
-            .select(F.pmod(F.xxhash64(lit), F.lit(n_b)).cast("int").alias("b"))
-            .collect()[0]["b"]
-        )
-        rel = m["buckets"].get(str(b))
-        if rel is None:  # that bucket holds no rows: provably absent
-            return self._read_paths(m["data"]).where(F.lit(False))
-        return self._read_paths([rel]).where(F.col(self.key) == lit)
+    def _bucket_ids(self, df: DataFrame, n_b: int) -> list[int]:
+        """The bucket census: one column-pruned distinct over the key
+        (≤ n_b ints)."""
+        bexpr = F.pmod(F.xxhash64(self.key), F.lit(n_b)).cast("int")
+        return sorted(r[0] for r in df.select(bexpr).distinct().collect())
 
     def read_keys(self, keys: DataFrame, version: int | None = None) -> DataFrame | None:
         """Multi-key lookup: every row whose key appears in ``keys`` (a
         frame carrying the table's key column), reading ONLY the
-        buckets those keys hash to — the batch form of
-        :meth:`read_key`, and the read-side mirror of the write side's
-        copy-on-write pruning: a diff-sized probe against a 100 TB
-        table scans O(touched buckets), never the table. The key set
-        is broadcast for the final semi-join (callers pass diff-sized
-        frames). The bucket census is the same one column-pruned
-        distinct-collect ``upsert`` performs (≤ n_buckets ints).
-        Unbucketed layouts fall back to a filtered full scan. NULL
-        keys never match (semi-join semantics). Returns None for an
-        empty table."""
+        buckets those keys hash to — the read-side mirror of the write
+        side's copy-on-write pruning: a diff-sized probe against a
+        100 TB table scans O(touched buckets), never the table. The
+        probe keys are cast to the table's key type before the census
+        (hash values are type-sensitive) and read once; the key set is
+        broadcast for the final semi-join (callers pass diff-sized
+        frames). Unbucketed layouts fall back to a filtered full scan.
+        NULL keys never match (semi-join semantics). Returns None for
+        an empty table."""
         m = self._manifest_for(version)
         if not m["data"]:
             return None
+        ktype = self._schema(m)[self.key].dataType
         # NULL keys never match — and must not reach the bucket census:
         # xxhash64(NULL) returns the seed, which would probe a spurious
         # bucket instead of no bucket
-        k = keys.select(self.key).where(F.col(self.key).isNotNull()).distinct()
+        k = keys.select(F.col(self.key).cast(ktype).alias(self.key)).where(
+            F.col(self.key).isNotNull()
+        )
         n_b = m["n_buckets"]
         if n_b is None or not m["buckets"]:
-            return self._read_paths(m["data"]).join(
+            return self._read_paths(m, m["data"]).join(
                 F.broadcast(k), self.key, "left_semi"
             )
-        # hash the probe keys with the TABLE's key type (hash values
-        # are type-sensitive, same rule as read_key)
-        dtype = self._read_paths([m["data"][0]]).schema[self.key].dataType
-        bexpr = F.pmod(
-            F.xxhash64(F.col(self.key).cast(dtype)), F.lit(n_b)
-        ).cast("int")
-        affected = sorted(
-            r[0] for r in k.select(bexpr.alias("__b")).distinct().collect()
-        )
-        paths = [m["buckets"][str(b)] for b in affected if str(b) in m["buckets"]]
+        k = _read_once(k)
+        paths = [
+            m["buckets"][str(b)]
+            for b in self._bucket_ids(k, n_b)
+            if str(b) in m["buckets"]
+        ]
         if not paths:  # every probed bucket is empty: provably absent
-            return self._read_paths(m["data"]).where(F.lit(False))
-        return self._read_paths(paths).join(F.broadcast(k), self.key, "left_semi")
+            return self._read_paths(m, m["data"]).where(F.lit(False))
+        return self._read_paths(m, paths).join(F.broadcast(k), self.key, "left_semi")
 
     def _try_claim(self, version: int) -> bool:
         """O_EXCL commit marker for the transition into ``version`` —
@@ -547,10 +539,14 @@ class ParquetMergeTable:
         update_cols: list[str] | None = None,
         txn_app: str | None = None,
         txn_version: int | None = None,
+        deletes: DataFrame | None = None,
     ) -> bool:
-        """Merge ``updates`` in with ON-CONFLICT semantics. Retries the
+        """Merge ``updates`` in with ON-CONFLICT semantics and, with
+        ``deletes`` (a frame carrying the key column), delete those
+        keys in the SAME commit; a key in both frames ends up deleted,
+        as an upsert followed by a delete would leave it. Retries the
         read-merge-commit cycle on writer conflicts until this writer's
-        updates land on top of the then-current snapshot.
+        changes land on top of the then-current snapshot.
 
         With (``txn_app``, ``txn_version``) the commit is idempotent
         per app: a version at or below the snapshot's recorded
@@ -560,44 +556,9 @@ class ParquetMergeTable:
         holds even when this writer loses races. Returns True if a
         commit happened, False if skipped as a replay.
         """
-
-        def snapshot(m: dict, n_b: int | None, dname: str):
-            if n_b is None:
-                existing = self._read_paths(m["data"])
-                merged = merge_into(existing, updates, self.key, update_cols)
-                merged.write.mode("overwrite").parquet(
-                    os.path.join(self.path, dname)
-                )
-                return [dname], {}, True
-            bexpr = F.pmod(F.xxhash64(self.key), F.lit(n_b)).cast("int")
-            # one column-pruned distinct over the key: ≤ n_b ints
-            affected = sorted(
-                r[0]
-                for r in updates.select(bexpr.alias("__b")).distinct().collect()
-            )
-            old_buckets = dict(m["buckets"])
-            # copy-on-write: scan ONLY the buckets that hold updated
-            # keys; everything else is carried forward by reference
-            existing = self._read_paths(
-                [old_buckets[str(b)] for b in affected if str(b) in old_buckets]
-            )
-            merged = merge_into(existing, updates, self.key, update_cols)
-            (
-                merged.withColumn("__bucket", bexpr)
-                .write.mode("overwrite")
-                .partitionBy("__bucket")
-                .parquet(os.path.join(self.path, dname))
-            )
-            new_buckets = dict(old_buckets)
-            for b in affected:
-                new_buckets[str(b)] = f"{dname}/__bucket={b}"
-            return (
-                [new_buckets[k] for k in sorted(new_buckets, key=int)],
-                new_buckets,
-                True,
-            )
-
-        return self._commit_loop(snapshot, txn_app, txn_version)
+        return self._commit_loop(
+            self._cow(updates, deletes, update_cols), txn_app, txn_version
+        )
 
     def delete(
         self,
@@ -615,55 +576,83 @@ class ParquetMergeTable:
         :meth:`upsert`; deleting absent keys still commits a version
         (the txn high-water mark must advance for exactly-once
         streaming deletes). NULL keys are never matched (SQL anti-join
-        semantics). Returns True unless skipped as a txn replay."""
+        semantics) and rewrite nothing. Returns True unless skipped as
+        a txn replay."""
+        return self._commit_loop(self._cow(None, keys, None), txn_app, txn_version)
+
+    def _cow(self, updates, deletes, update_cols):
+        """The snapshot function behind :meth:`upsert` and
+        :meth:`delete`: merge ``updates`` (or None) into the table,
+        then anti-join the ``deletes`` keys (or None). Both frames get
+        their key cast to the table's key type. The bucketed layout
+        rewrites the union of the buckets the two frames touch in one
+        write and drops buckets that end up empty; its inputs are
+        materialised once (:func:`_read_once`) and reused by OCC
+        retries."""
+        held: dict = {}
 
         def snapshot(m: dict, n_b: int | None, dname: str):
-            k = keys.select(self.key).distinct()
-            if n_b is None:
-                existing = self._read_paths(m["data"])
-                if existing is None:
-                    return list(m["data"]), dict(m["buckets"]), False
-                remaining = existing.join(k, self.key, "left_anti")
-                remaining.write.mode("overwrite").parquet(
-                    os.path.join(self.path, dname)
-                )
-                return [dname], {}, True
-            bexpr = F.pmod(F.xxhash64(self.key), F.lit(n_b)).cast("int")
+            out = os.path.join(self.path, dname)
+            schema = self._schema(m)
+            if schema is not None:
+                ktype = schema[self.key].dataType
+            elif updates is not None:
+                ktype = updates.schema[self.key].dataType
+            else:
+                ktype = None
+            u, k = updates, None if deletes is None else deletes.select(self.key)
+            if n_b is not None:
+                if not held:
+                    held["u"] = None if u is None else _read_once(u)
+                    held["k"] = None if k is None else _read_once(k)
+                u, k = held["u"], held["k"]
+            if ktype is not None:
+                cast = lambda df: df.withColumn(self.key, F.col(self.key).cast(ktype))  # noqa: E731
+                u = None if u is None else cast(u)
+                k = None if k is None else cast(k)
+            if k is not None:
+                # xxhash64(NULL) is the seed: a NULL delete key would
+                # rewrite a bucket while matching no row
+                k = k.where(F.col(self.key).isNotNull())
             old_buckets = dict(m["buckets"])
-            affected = sorted(
-                b
-                for (b,) in k.select(bexpr.alias("__b")).distinct().collect()
-                if str(b) in old_buckets  # data-less buckets: no-op
-            )
-            if not affected:
-                return list(m["data"]), old_buckets, False
-            existing = self._read_paths([old_buckets[str(b)] for b in affected])
-            remaining = existing.join(k, self.key, "left_anti")
+            if n_b is None:
+                touched_rels = m["data"]
+            else:
+                touched = self._bucket_ids(
+                    reduce(DataFrame.union, [f.select(self.key) for f in (u, k) if f is not None]),
+                    n_b,
+                )
+                touched_rels = [old_buckets[str(b)] for b in touched if str(b) in old_buckets]
+            existing = self._read_paths(m, touched_rels)
+            merged = existing if u is None else merge_into(existing, u, self.key, update_cols)
+            if merged is None:  # nothing to delete from, nothing to add
+                return list(m["data"]), old_buckets, None
+            if k is not None:
+                merged = merged.join(k, self.key, "left_anti")
+            if n_b is None:
+                merged.write.mode("overwrite").parquet(out)
+                return [dname], {}, merged.schema
             (
-                remaining.withColumn("__bucket", bexpr)
+                merged.withColumn("__bucket", F.pmod(F.xxhash64(self.key), F.lit(n_b)).cast("int"))
                 .write.mode("overwrite")
                 .partitionBy("__bucket")
-                .parquet(os.path.join(self.path, dname))
+                .parquet(out)
             )
             # a fully-emptied bucket writes no partition dir: drop it
             present = {
-                int(e.split("=", 1)[1])
-                for e in os.listdir(os.path.join(self.path, dname))
-                if e.startswith("__bucket=")
+                int(e.split("=", 1)[1]) for e in os.listdir(out) if e.startswith("__bucket=")
             }
-            new_buckets = {
-                b: rel for b, rel in old_buckets.items() if int(b) not in affected
-            }
-            for b in affected:
+            new_buckets = {b: rel for b, rel in old_buckets.items() if int(b) not in touched}
+            for b in touched:
                 if b in present:
                     new_buckets[str(b)] = f"{dname}/__bucket={b}"
             return (
                 [new_buckets[x] for x in sorted(new_buckets, key=int)],
                 new_buckets,
-                True,
+                merged.schema,
             )
 
-        return self._commit_loop(snapshot, txn_app, txn_version)
+        return snapshot
 
     def rebucket(self, n_buckets: int | None) -> bool:
         """Rewrite the table into a different bucket count (or back to
@@ -676,14 +665,14 @@ class ParquetMergeTable:
         it, never across the layout change."""
 
         def snapshot(m: dict, _old_n_b, dname: str):
-            existing = self._read_paths(m["data"])
+            existing = self._read_paths(m, m["data"])
             if existing is None:
-                return [], {}, False  # empty table: layout flip only
+                return [], {}, None  # empty table: layout flip only
             if n_buckets is None:
                 existing.write.mode("overwrite").parquet(
                     os.path.join(self.path, dname)
                 )
-                return [dname], {}, True
+                return [dname], {}, existing.schema
             bexpr = F.pmod(F.xxhash64(self.key), F.lit(n_buckets)).cast("int")
             (
                 existing.withColumn("__bucket", bexpr)
@@ -699,7 +688,7 @@ class ParquetMergeTable:
             return (
                 [buckets[k] for k in sorted(buckets, key=int)],
                 buckets,
-                True,
+                existing.schema,
             )
 
         return self._commit_loop(snapshot, None, None, n_b_override=n_buckets)
@@ -720,8 +709,8 @@ class ParquetMergeTable:
         either prunes.
 
         Plain layout only: a hash-bucketed table's files are pinned to
-        the key→bucket map (its pruning story is ``read_key``'s O(1)
-        bucket lookup); ``rebucket(None)`` first to convert. Like
+        the key→bucket map (its pruning story is ``read_keys``' bucket
+        lookup); ``rebucket(None)`` first to convert. Like
         Delta's OPTIMIZE, the clustering is maintenance state, not an
         invariant — the next upsert writes its snapshot unclustered
         and a periodic re-optimize restores it. Serializes through the
@@ -742,9 +731,9 @@ class ParquetMergeTable:
                     "optimize() requires the plain layout; this table is "
                     f"hash-bucketed (n_buckets={n_b}) — rebucket(None) first"
                 )
-            existing = self._read_paths(m["data"])
+            existing = self._read_paths(m, m["data"])
             if existing is None:
-                return [], {}, False  # empty table: nothing to cluster
+                return [], {}, None  # empty table: nothing to cluster
             (
                 existing.repartitionByRange(n_files, *cols)
                 .sortWithinPartitions(*cols)
@@ -758,7 +747,7 @@ class ParquetMergeTable:
                 for e in os.listdir(os.path.join(self.path, dname))
                 if e.startswith("__cluster=")
             }
-            return [clusters[k] for k in sorted(clusters, key=int)], {}, True
+            return [clusters[k] for k in sorted(clusters, key=int)], {}, existing.schema
 
         return self._commit_loop(snapshot, None, None)
 
@@ -777,7 +766,7 @@ class ParquetMergeTable:
         never lie. At 100 TB this is the difference between a catalog
         lookup and a cluster job for every "how big is it" question."""
         m = self._manifest_for(version)
-        stats = m.get("stats", {})
+        stats = m["stats"]
         if not m["data"]:
             return {"rows": 0, "cols": {}}
         if any(r not in stats for r in m["data"]):
@@ -831,10 +820,11 @@ class ParquetMergeTable:
         self, snapshot, txn_app, txn_version, n_b_override=_KEEP_N_BUCKETS
     ) -> bool:
         """Shared OCC read-compute-commit cycle. ``snapshot(manifest,
-        n_buckets, dname) -> (data, buckets, wrote)`` produces the new
-        snapshot contents on top of the then-current state; it is
-        re-invoked from scratch whenever this writer loses a race."""
-        import json as _json
+        n_buckets, dname) -> (data, buckets, written)`` produces the new
+        snapshot contents on top of the then-current state (``written``
+        is the schema of the frame it wrote under ``dname``, None when
+        it wrote nothing); it is re-invoked from scratch whenever this
+        writer loses a race."""
         import time
 
         if (txn_app is None) != (txn_version is None):
@@ -856,11 +846,12 @@ class ParquetMergeTable:
                 n_b = m["n_buckets"] if base_ref is not None else self.n_buckets
             new_version = base_version + 1
             dname = f"d_{uuid.uuid4().hex[:12]}"
-            new_data, new_buckets, wrote = snapshot(m, n_b, dname)
-            new_stats = self._manifest_stats(m, new_data, dname, wrote)
+            new_data, new_buckets, written = snapshot(m, n_b, dname)
+            new_stats = self._manifest_stats(m, new_data, dname, written)
+            schema = _schema_union(self._schema(m), written)
             mname = f"m_{new_version:09d}_{uuid.uuid4().hex[:12]}.json"
             with open(os.path.join(self.path, mname), "w") as f:
-                _json.dump(
+                json.dump(
                     {
                         "version": new_version,
                         "n_buckets": n_b,
@@ -868,13 +859,14 @@ class ParquetMergeTable:
                         "buckets": new_buckets,
                         "txn": txn,
                         "stats": new_stats,
+                        "schema": None if schema is None else schema.jsonValue(),
                     },
                     f,
                 )
             if not self._try_claim(new_version):
                 # another writer won this transition: discard our
                 # candidate, wait for their flip, re-compute on top
-                if wrote:
+                if written is not None:
                     shutil.rmtree(
                         os.path.join(self.path, dname), ignore_errors=True
                     )
@@ -921,8 +913,7 @@ class ParquetMergeTable:
         cur_v, cur_ref = self._current()
         now = time.time()
         removed: list[int] = []
-        # pass 1: retire manifests (legacy dir snapshots: the dir IS
-        # the manifest — removing it removes the data too)
+        # pass 1: retire manifests
         for v, name in self._logged().items():
             p = os.path.join(self.path, name)
             if p == cur_ref or v > cur_v - retain:
@@ -930,15 +921,9 @@ class ParquetMergeTable:
             try:
                 if now - os.path.getmtime(p) <= grace:
                     continue
+                os.remove(p)
             except OSError:
                 continue
-            if os.path.isdir(p):
-                shutil.rmtree(p, ignore_errors=True)
-            else:
-                try:
-                    os.remove(p)
-                except OSError:
-                    continue
             removed.append(v)
             marker = os.path.join(self.path, f"_COMMIT.v{v:09d}")
             if os.path.exists(marker):
@@ -968,7 +953,7 @@ class ParquetMergeTable:
                 except OSError:
                     pass
                 continue
-            if not (name.startswith(("d_", "v_")) and os.path.isdir(p)):
+            if not (name.startswith("d_") and os.path.isdir(p)):
                 continue
             if name in live_data:
                 continue  # whole-dir snapshot still referenced
@@ -1031,6 +1016,7 @@ def cascade_delete(
     children: list[ParquetMergeTable],
     txn_app: str | None = None,
     txn_version: int | None = None,
+    parent_updates: DataFrame | None = None,
 ) -> bool:
     """ON DELETE CASCADE composed over parquet merge tables — the
     reference's ``ways_metadata`` FK
@@ -1040,6 +1026,9 @@ def cascade_delete(
     the same ids (each child's own key column name — ``gid`` in the
     reference — is aliased from the parent's). Each delete is the
     bucket-pruned copy-on-write path of :meth:`ParquetMergeTable.delete`.
+    With ``parent_updates`` the parent's commit is
+    ``parent.upsert(parent_updates, deletes=keys)``: its upserts and
+    deletes land in one commit.
 
     Children commit FIRST: the FK invariant "no child row references an
     absent parent" then holds at EVERY crash point — a crash after a
@@ -1057,11 +1046,13 @@ def cascade_delete(
             txn_app=txn_app,
             txn_version=txn_version,
         )
-    committed |= parent.delete(
-        keys.select(F.col(key_col).alias(parent.key)),
-        txn_app=txn_app,
-        txn_version=txn_version,
-    )
+    parent_keys = keys.select(F.col(key_col).alias(parent.key))
+    if parent_updates is None:
+        committed |= parent.delete(parent_keys, txn_app=txn_app, txn_version=txn_version)
+    else:
+        committed |= parent.upsert(
+            parent_updates, deletes=parent_keys, txn_app=txn_app, txn_version=txn_version
+        )
     return committed
 
 

@@ -9,14 +9,14 @@ consumes in production — and maintains
    recomputing ONLY each changeset's blast radius
    (`sources/osm_diff.py`),
 
-all exactly-once: every per-table commit carries the table's
-(txn_app, 2*batch_id / 2*batch_id+1) marks, so a crashed-and-replayed
-micro-batch is a no-op. OsmChange files must apply in sequence order:
-each micro-batch applies its files as ONE combined changeset collapsed
-last-op-wins by the explicit (file path, in-file position) key — file
-names carry the osmosis sequence number and sort lexicographically in
-sequence order, so same-mtime bursts are safe; across polls the file
-source delivers oldest-first.
+all exactly-once: each table commits once per batch, its upserts and
+deletes together, under the mark (txn_app, 2*batch_id+1), so a
+crashed-and-replayed micro-batch is a no-op. OsmChange files must apply
+in sequence order: each micro-batch applies its files as ONE combined
+changeset collapsed last-op-wins by the explicit (file path, in-file
+position) key — file names carry the osmosis sequence number and sort
+lexicographically in sequence order, so same-mtime bursts are safe;
+across polls the file source delivers oldest-first.
 
 Scale shape per batch: the diff is MBs → every join broadcasts; the
 element upserts touch O(diff) buckets of the bucketed stores; the
@@ -205,12 +205,25 @@ class OsmReplicationPipeline:
         O(diff + blast radius): stores and index are probed with
         bucket-pruned ``read_keys`` (the pre-update snapshots' data
         files are immutable, so reading them lazily across the upserts
-        is safe), never scanned."""
+        is safe), never scanned.
+
+        Each table commits once, its upserts and deletes together
+        (``upsert(..., deletes=...)``), in this order: ``nodes``,
+        ``node_ways``, the FK children's deletes, ``ways``, ``derived``
+        (then, with ``derive_relations``, ``member_rels``,
+        ``relations``, ``derived_rels``). The index commits before the
+        ways store and children before their parent; the comments below
+        give the crash-replay argument for each. Every commit carries
+        the mark ``txn_app="osc"``, ``txn_version=2*batch_id+1``, so a
+        replayed batch skips every table that already committed it. The
+        mark is odd so that it also compares correctly with a store that
+        recorded a batch's upserts as ``2*batch_id`` and its deletes as
+        ``2*batch_id+1``."""
         from ..sources.osm import assemble_way_geometries
         from ..sources.osm_diff import affected_way_ids
 
         net = net_changes(diff).localCheckpoint(eager=True)
-        v_up, v_del = 2 * batch_id, 2 * batch_id + 1
+        v = 2 * batch_id + 1
 
         def split(kind: str, cols: list[str]):
             k = net.filter(F.col("kind") == kind)
@@ -233,8 +246,7 @@ class OsmReplicationPipeline:
         if old_refs is not None:
             old_refs = old_refs.localCheckpoint(eager=True)
 
-        self.nodes.upsert(n_up, txn_app="osc", txn_version=v_up)
-        self.nodes.delete(n_del, txn_app="osc", txn_version=v_del)
+        self.nodes.upsert(n_up, deletes=n_del, txn_app="osc", txn_version=v)
 
         # ---- node→ways index maintenance (O(changed ways' refs)) ----
         # COMMIT ORDER MATTERS for crash-replay safety: the index
@@ -275,16 +287,20 @@ class OsmReplicationPipeline:
         emptied = touched_nodes.join(
             new_rows.select(F.col("id").alias("node_id")), "node_id", "left_anti"
         ).select(F.col("node_id").alias("id"))
-        self.node_ways.upsert(new_rows, txn_app="osc", txn_version=v_up)
-        self.node_ways.delete(emptied, txn_app="osc", txn_version=v_del)
+        self.node_ways.upsert(new_rows, deletes=emptied, txn_app="osc", txn_version=v)
 
-        self.ways.upsert(w_up, txn_app="osc", txn_version=v_up)
         # way delete cascades into the FK children (ways_metadata):
         # children-first under the same per-table txn marks, so a way
         # deleted by a changeset takes its metadata rows with it —
-        # the DDL's ON DELETE CASCADE, replay-safe.
+        # the DDL's ON DELETE CASCADE, replay-safe. The ways store's
+        # upserts ride its delete commit.
         cascade_delete(
-            self.ways, w_del, self.way_children, txn_app="osc", txn_version=v_del
+            self.ways,
+            w_del,
+            self.way_children,
+            txn_app="osc",
+            txn_version=v,
+            parent_updates=w_up,
         )
 
         # ---- blast-radius recompute, probed not scanned ----
@@ -306,17 +322,14 @@ class OsmReplicationPipeline:
         if aff_nodes is None:
             aff_nodes = self.spark.createDataFrame([], "id long, lat double, lon double, tags map<string,string>")
         rebuilt = assemble_way_geometries(aff_nodes, aff_ways)
-        self.derived.upsert(self.derive(rebuilt), txn_app="osc", txn_version=v_up)
-        deleted_ways = (
-            net.filter((F.col("kind") == "way") & (F.col("op") == "delete"))
-            .select("id")
+        self.derived.upsert(
+            self.derive(rebuilt), deletes=w_del, txn_app="osc", txn_version=v
         )
-        self.derived.delete(deleted_ways, txn_app="osc", txn_version=v_del)
 
         if self.derive_relations is not None:
-            self._apply_relations(net, diff, v_up, v_del)
+            self._apply_relations(net, diff, v)
 
-    def _apply_relations(self, net, diff, v_up: int, v_del: int) -> None:
+    def _apply_relations(self, net, diff, v: int) -> None:
         """Relation-side maintenance under the same changeset: store +
         member index + derived table, mirroring the way side exactly —
         pre-update member lists read before any relation commit, index
@@ -356,11 +369,8 @@ class OsmReplicationPipeline:
         emptied = touched_mk.join(
             new_rows.select(F.col("id").alias("mk")), "mk", "left_anti"
         ).select(F.col("mk").alias("id"))
-        self.member_rels.upsert(new_rows, txn_app="osc", txn_version=v_up)
-        self.member_rels.delete(emptied, txn_app="osc", txn_version=v_del)
-
-        self.relations.upsert(r_up, txn_app="osc", txn_version=v_up)
-        self.relations.delete(r_del, txn_app="osc", txn_version=v_del)
+        self.member_rels.upsert(new_rows, deletes=emptied, txn_app="osc", txn_version=v)
+        self.relations.upsert(r_up, deletes=r_del, txn_app="osc", txn_version=v)
 
         # ---- blast radius via the maintained index ----
         touched_members = net.filter(F.col("kind") != "relation").select(
@@ -390,10 +400,10 @@ class OsmReplicationPipeline:
             )
         self.derived_rels.upsert(
             self.derive_relations(aff_rels.select(*REL_COLS)),
+            deletes=r_del,
             txn_app="osc",
-            txn_version=v_up,
+            txn_version=v,
         )
-        self.derived_rels.delete(r_del, txn_app="osc", txn_version=v_del)
 
     def run_stream(self, osc_dir: str, checkpoint_dir: str) -> None:
         """Drain ``osc_dir`` (availableNow); each micro-batch applies

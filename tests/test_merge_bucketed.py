@@ -16,7 +16,7 @@ model, re-expressed over plain parquet). These tests pin:
 
 from __future__ import annotations
 
-import json
+import itertools
 import os
 
 import pytest
@@ -456,7 +456,7 @@ def test_model_random_ops_with_optimize(spark, tmp_path):
 
 def test_read_keys_prunes_to_probed_buckets(spark, tmp_path):
     """Multi-key lookup reads ONLY the buckets the probe keys hash to
-    (the batch form of read_key), matches a filtered full scan exactly,
+    (a multi-key point lookup), matches a filtered full scan exactly,
     never matches NULL keys, and falls back cleanly on plain layouts
     and empty tables."""
     from pyspark.sql import functions as F
@@ -547,3 +547,147 @@ def test_model_random_cascade_delete_two_children(spark, tmp_path):
         # FK invariant: no child row references an absent parent
         assert set(got_m) <= set(got_p), f"step {step} meta orphans"
         assert set(got_s) <= set(got_p), f"step {step} stats orphans"
+
+
+def _long_table(spark, tmp_path, n_buckets=8):
+    t = ParquetMergeTable(spark, str(tmp_path / "tbl"), key="gid", n_buckets=n_buckets)
+    t.upsert(spark.createDataFrame([(i, float(i)) for i in range(40)], "gid long, val double"))
+    return t
+
+
+def test_census_hashes_the_table_key_type(spark, tmp_path):
+    """xxhash64 hashes int and long differently: keys arriving as int
+    must be cast to the table's long key before the bucket census, or
+    updates and deletes land in (or read) the wrong buckets."""
+    t = _long_table(spark, tmp_path)
+    t.upsert(spark.createDataFrame([(i, -1.0) for i in range(5)], "gid int, val double"))
+    t.delete(spark.createDataFrame([(i,) for i in range(10, 15)], "gid int"))
+    rows = _rows(t.read())
+    assert len(rows) == 35
+    assert all(rows[i] == (-1.0,) for i in range(5))
+    assert not set(range(10, 15)) & set(rows)
+    assert t.read().schema["gid"].dataType.simpleString() == "bigint"
+
+
+def test_null_delete_keys_rewrite_nothing(spark, tmp_path):
+    """A NULL delete key matches no row, so it must rewrite no bucket
+    (xxhash64(NULL) is the seed, which names a real bucket); the commit
+    still happens, to advance the txn mark."""
+    t = _long_table(spark, tmp_path)
+    m1 = t._read_manifest(t._current()[1])
+    assert t.delete(spark.createDataFrame([(None,)], "gid long"), txn_app="a", txn_version=0)
+    m2 = t._read_manifest(t._current()[1])
+    assert m2["version"] == m1["version"] + 1
+    assert m2["buckets"] == m1["buckets"] and m2["txn"] == {"a": 0}
+    assert len(_rows(t.read())) == 40
+
+
+_GROUPS = itertools.count()
+
+
+def _jobs(spark, fn):
+    """(result, [stage names of each job]) of the Spark jobs ``fn`` runs."""
+    sc = spark.sparkContext
+    group = f"jobshape-{os.getpid()}-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    names = [
+        [st.getStageInfo(s).name for s in st.getJobInfo(j).stageIds if st.getStageInfo(s)]
+        for j in sorted(st.getJobIdsForGroup(group))
+    ]
+    return out, names
+
+
+def test_job_shape_of_probe_and_commit(spark, tmp_path):
+    """The manifest's schema replaces Spark's footer inference: a
+    read_keys on a bucketed table runs only its bucket census, no
+    inference job (whose call site is the ``parquet`` reader call). An
+    upsert with deletes is one commit."""
+    from pyspark.sql import functions as F
+
+    t = _long_table(spark, tmp_path)
+    t.upsert(spark.createDataFrame([(100, 1.0)], "gid long, val double"))  # 2 dirs
+    keys = spark.createDataFrame([(3,), (17,), (21,)], "gid long")
+    got, names = _jobs(spark, lambda: t.read_keys(keys))
+    assert not [n for n in names if any(s.startswith("parquet at") for s in n)], names
+    _, census = _jobs(
+        spark,
+        lambda: keys.select(F.pmod(F.xxhash64("gid"), F.lit(8))).distinct().collect(),
+    )
+    assert len(names) == len(census)
+    assert {r.gid for r in got.collect()} == {3, 17, 21}
+
+    v = t._current()[0]
+    t.upsert(
+        spark.createDataFrame([(1, 10.0), (2, 20.0), (50, 50.0)], "gid long, val double"),
+        deletes=spark.createDataFrame([(2,), (7,)], "gid long"),
+    )
+    assert t._current()[0] == v + 1
+    rows = _rows(t.read())
+    assert rows[1] == (10.0,) and rows[50] == (50.0,)
+    assert 2 not in rows and 7 not in rows  # a key in both frames is deleted
+
+
+def test_bucketed_inputs_evaluated_once(spark, tmp_path):
+    """The bucketed upsert reads its updates twice (census, then the
+    merge): a lazy input must be computed once, not re-run per read."""
+    from pyspark.sql import functions as F
+
+    t = _long_table(spark, tmp_path)
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def counted(g):
+        calls.add(1)
+        return g
+
+    updates = spark.createDataFrame(
+        [(i, -float(i)) for i in range(5)], "gid long, val double"
+    ).select(counted("gid").alias("gid"), "val")
+    t.upsert(updates)
+    assert calls.value == 5
+    assert _rows(t.read())[4] == (-4.0,)
+
+
+def test_upsert_with_deletes_drops_emptied_buckets_both_layouts(spark, tmp_path):
+    """upsert(updates, deletes=) equals an upsert followed by a delete,
+    in one commit, under both layouts; a bucket the deletes empty drops
+    out of the manifest, untouched buckets are carried by reference."""
+    import pyspark.sql.functions as F
+
+    buck = _long_table(spark, tmp_path)
+    plain = ParquetMergeTable(spark, str(tmp_path / "plain"), key="gid")
+    plain.upsert(buck.read())
+    m1 = buck._read_manifest(buck._current()[1])
+    bexpr = F.pmod(F.xxhash64("gid"), F.lit(8)).cast("int")
+    by_bucket: dict = {}
+    for r in buck.read().select("gid", bexpr.alias("b")).collect():
+        by_bucket.setdefault(r.b, []).append(r.gid)
+    victim, victims = min(by_bucket.items(), key=lambda kv: len(kv[1]))
+    # a new key outside the victim bucket, so the deletes empty it
+    new_key, new_bucket = next(
+        (r.gid, r.b)
+        for r in spark.range(1000, 1016)
+        .select(F.col("id").alias("gid"), bexpr.alias("b"))
+        .collect()
+        if r.b != victim
+    )
+    upd = spark.createDataFrame([(victims[0], 0.5), (new_key, 1.0)], "gid long, val double")
+    dels = spark.createDataFrame([(g,) for g in victims], "gid long")
+    for t in (buck, plain):
+        v = t._current()[0]
+        t.upsert(upd, deletes=dels, txn_app="cs", txn_version=3)
+        assert t._current()[0] == v + 1
+        rows = _rows(t.read())
+        assert len(rows) == 40 - len(victims) + 1 and rows[new_key] == (1.0,)
+        assert not set(victims) & set(rows)
+        assert not t.upsert(upd, deletes=dels, txn_app="cs", txn_version=3)  # replay
+    m2 = buck._read_manifest(buck._current()[1])
+    assert str(victim) not in m2["buckets"]  # emptied → dropped
+    for b, rel in m2["buckets"].items():
+        if int(b) != new_bucket:
+            assert rel == m1["buckets"][b]

@@ -152,23 +152,27 @@ def test_delete_refreshes_stats(spark, seeded):
     assert {r[0] for r in got} == {3, 17}
 
 
+def _key(spark, g):
+    return spark.createDataFrame([(g,)], "gid bigint")
+
+
 def test_point_lookup_reads_single_bucket(spark, seeded):
-    df = seeded.read_key(17)
+    df = seeded.read_keys(_key(spark, 17))
     rows = df.collect()
     assert len(rows) == 1 and rows[0].val == 171
     files = df.inputFiles()
     assert files and len({f.split("__bucket=")[1].split("/")[0] for f in files}) == 1
     # provably-absent key in a populated bucket: empty, still 1 bucket
-    assert seeded.read_key(10**9).count() == 0
+    assert seeded.read_keys(_key(spark, 10**9)).count() == 0
     # time travel: the pre-incremental version sees the old value
-    assert seeded.read_key(17, version=1).collect()[0].val == 170
+    assert seeded.read_keys(_key(spark, 17), version=1).collect()[0].val == 170
 
 
 def test_point_lookup_unbucketed_fallback(spark, tmp_path):
     t = _mk(spark, tmp_path / "plain", stats_cols=["val"])
     t.upsert(_df(spark, [(g, g, 1) for g in range(10)]))
-    assert t.read_key(7).collect()[0].val == 7
-    assert t.read_key(99).count() == 0
+    assert t.read_keys(_key(spark, 7)).collect()[0].val == 7
+    assert t.read_keys(_key(spark, 99)).count() == 0
 
 
 def test_no_stats_cols_keeps_everything_and_stays_exact(spark, tmp_path):

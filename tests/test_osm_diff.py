@@ -59,6 +59,55 @@ def diff(spark, osc_path):
     return read_osc_elements(spark, osc_path).localCheckpoint(eager=True)
 
 
+# A small region written inline, for the replication commit-order tests:
+# 12 nodes, 5 ways and 2 relations. SHRINK_WAY loses vertices 3 and 4
+# (indexed by no other way, so their node_ways rows empty) and 5 (still
+# held by 101); META_WAY and BARE_WAY are deleted, the first with a
+# ways_metadata row, the second without one. SHRINK_REL loses members,
+# DROP_REL is deleted.
+SHRINK_WAY, META_WAY, BARE_WAY = 100, 102, 103
+SHRINK_REL, DROP_REL = 900, 901
+_SMALL_RELS = {
+    SHRINK_REL: ([("way", SHRINK_WAY, "from"), ("node", 2, "via"), ("way", 104, "to")], "restriction"),
+    DROP_REL: ([("way", 101, ""), ("way", META_WAY, "")], "route"),
+}
+_SMALL_WAYS = {
+    SHRINK_WAY: ([1, 2, 3, 4, 5], "residential"),
+    101: ([5, 6, 7], "tertiary"),
+    META_WAY: ([7, 8, 9], "footway"),
+    BARE_WAY: ([9, 10, 11, 12], "service"),
+    104: ([2, 10], "residential"),
+}
+
+
+def _small_region_xml() -> str:
+    out = ['<osm version="0.6">']
+    for n in range(1, 13):
+        out.append(
+            f'<node id="{n}" version="1" lat="{34.1 + n / 1000}" lon="{-118.3 + n / 1000}"/>'
+        )
+    for w, (refs, hw) in _SMALL_WAYS.items():
+        nds = "".join(f'<nd ref="{r}"/>' for r in refs)
+        out.append(f'<way id="{w}" version="1">{nds}<tag k="highway" v="{hw}"/></way>')
+    for r, (members, kind) in _SMALL_RELS.items():
+        mem = "".join(f'<member type="{t}" ref="{x}" role="{ro}"/>' for t, x, ro in members)
+        out.append(f'<relation id="{r}" version="1">{mem}<tag k="type" v="{kind}"/></relation>')
+    return "\n".join(out + ["</osm>"])
+
+
+@pytest.fixture
+def small_region(spark, tmp_path):
+    p = tmp_path / "small.osm"
+    p.write_text(_small_region_xml())
+    return split_elements(read_osm_elements(spark, str(p)).localCheckpoint(eager=True))
+
+
+def _osc(spark, tmp_path, body: str):
+    p = tmp_path / "c.osc"
+    p.write_text(f'<osmChange version="0.6">{body}</osmChange>')
+    return read_osc_elements(spark, str(p)).localCheckpoint(eager=True)
+
+
 def test_parse_ops_and_schema(diff, base):
     assert set(base.columns) | {"op", "src_path", "src_pos"} == set(diff.columns)
     by_op = {r["op"]: r["n"] for r in diff.groupBy("op").agg(F.count("*").alias("n")).collect()}
@@ -446,13 +495,14 @@ def test_maintained_node_way_index_equals_from_scratch(base, spark, tmp_path):
 
 
 @pytest.mark.parametrize("crash_at", ["node_ways_upsert", "ways_upsert", "derived_upsert"])
-def test_crashed_batch_replay_keeps_index_consistent(base, spark, tmp_path, crash_at):
+def test_crashed_batch_replay_keeps_index_consistent(small_region, spark, tmp_path, crash_at):
     """Crash-replay safety of the commit ORDER inside apply_changeset:
     the node→ways index commits BEFORE the ways store, so whichever
     table commit the crash lands on, replaying the batch leaves the
     maintained index equal to a from-scratch rebuild (the dangerous
     window — ways committed, index not — is unreachable). Simulated by
-    making one table's upsert raise, then replaying the batch."""
+    making one table's upsert (each table's one commit, deletes
+    included) raise, then replaying the batch."""
     from ariadne_cartograph_spark.streaming.osm_replication import (
         OsmReplicationPipeline,
     )
@@ -461,23 +511,21 @@ def test_crashed_batch_replay_keeps_index_consistent(base, spark, tmp_path, cras
         return geoms.select("id", F.size("geom").alias("n_pts"))
 
     pipe = OsmReplicationPipeline(spark, str(tmp_path / "repl"), derive, n_buckets=4)
-    p0 = split_elements(base)
-    pipe.bootstrap(p0["nodes"], p0["ways"])
+    pipe.bootstrap(small_region["nodes"], small_region["ways"])
 
-    # a changeset where a way LOSES vertices: the retagged way shrinks
-    # from 5 refs to 2 — nodes 122714885/90/92 must leave its index rows
-    osc = f"""<osmChange version="0.6">
-      <modify>
-        <way id="{RETAGGED_WAY}" version="3">
-          <nd ref="122714882"/>
-          <nd ref="122714883"/>
-          <tag k="highway" v="tertiary"/>
-        </way>
-      </modify>
-    </osmChange>"""
-    p = tmp_path / "c.osc"
-    p.write_text(osc)
-    diff = read_osc_elements(spark, str(p)).localCheckpoint(eager=True)
+    # SHRINK_WAY shrinks from 5 refs to 2 — nodes 3/4/5 must leave its
+    # index rows (3 and 4 entirely) — and META_WAY is deleted
+    diff = _osc(
+        spark,
+        tmp_path,
+        f"""<modify>
+          <way id="{SHRINK_WAY}" version="2">
+            <nd ref="1"/><nd ref="2"/>
+            <tag k="highway" v="tertiary"/>
+          </way>
+        </modify>
+        <delete><way id="{META_WAY}" version="2"/></delete>""",
+    )
 
     table = {
         "node_ways_upsert": pipe.node_ways,
@@ -508,11 +556,20 @@ def test_crashed_batch_replay_keeps_index_consistent(base, spark, tmp_path, cras
     }
     assert maintained == from_scratch
     idx = dict(maintained)
-    for gone in (122714885, 122714890, 122714892):
-        assert RETAGGED_WAY not in idx.get(gone, ()), f"stale entry for node {gone}"
-    # way store and derived table reflect the shrunk way
-    assert pipe.ways.read().filter(F.col("id") == RETAGGED_WAY).collect()[0].node_refs == [122714882, 122714883]
-    assert pipe.derived.read().filter(F.col("id") == RETAGGED_WAY).collect()[0].n_pts == 2
+    assert not {3, 4, 8} & set(idx), "emptied index rows kept"
+    assert idx[5] == (101,) and idx[7] == (101,) and idx[9] == (BARE_WAY,)
+    # way store and derived table reflect the shrunk and deleted ways
+    ways = {r.id: r.node_refs for r in pipe.ways.read().collect()}
+    assert ways[SHRINK_WAY] == [1, 2] and META_WAY not in ways
+    derived = {r.id: r.n_pts for r in pipe.derived.read().collect()}
+    assert derived[SHRINK_WAY] == 2 and META_WAY not in derived
+    want = {
+        (r.id, r.n_pts)
+        for r in derive(
+            assemble_way_geometries(pipe.nodes.read(), pipe.ways.read())
+        ).collect()
+    }
+    assert set(derived.items()) == want
 
 
 def test_apply_osc_model_random_multi_file(base, spark, tmp_path):
@@ -769,7 +826,7 @@ def test_apply_osc_model_random_ways_and_nodes(base, spark, tmp_path):
 
 @pytest.mark.slow
 @pytest.mark.parametrize("crash_at", ["member_rels", "relations", "derived_rels"])
-def test_crashed_batch_replay_relation_side(base, spark, tmp_path, crash_at):
+def test_crashed_batch_replay_relation_side(small_region, spark, tmp_path, crash_at):
     """Crash-replay safety of the RELATION-side commit order (member
     index before relations store, mirroring the way side): whichever
     relation-table commit the crash lands on, replaying the batch
@@ -788,25 +845,22 @@ def test_crashed_batch_replay_relation_side(base, spark, tmp_path, crash_at):
     pipe = OsmReplicationPipeline(
         spark, str(tmp_path / "repl"), derive, n_buckets=4, derive_relations=derive_rels
     )
-    p0 = split_elements(base)
+    p0 = small_region
     pipe.bootstrap(p0["nodes"], p0["ways"], relations=p0["relations"])
 
     # shrink a relation's member list (stale-index hazard: the removed
-    # member's index entry must drop) and delete another relation
-    rel = p0["relations"].filter(F.col("id") == 3516928).collect()[0]
-    keep = rel.members[0]
-    osc = f"""<osmChange version="0.6">
-      <modify>
-        <relation id="3516928" version="2">
-          <member type="{keep.member_type}" ref="{keep.ref}" role="{keep.role or ''}"/>
-          <tag k="type" v="restriction"/>
-        </relation>
-      </modify>
-      <delete><relation id="333928" version="2"/></delete>
-    </osmChange>"""
-    p = tmp_path / "c.osc"
-    p.write_text(osc)
-    diff = read_osc_elements(spark, str(p)).localCheckpoint(eager=True)
+    # members' index entries must drop) and delete another relation
+    diff = _osc(
+        spark,
+        tmp_path,
+        f"""<modify>
+          <relation id="{SHRINK_REL}" version="2">
+            <member type="way" ref="{SHRINK_WAY}" role="from"/>
+            <tag k="type" v="restriction"/>
+          </relation>
+        </modify>
+        <delete><relation id="{DROP_REL}" version="2"/></delete>""",
+    )
 
     table = getattr(pipe, crash_at)
     real_upsert = table.upsert
@@ -821,8 +875,8 @@ def test_crashed_batch_replay_relation_side(base, spark, tmp_path, crash_at):
     pipe.apply_changeset(diff, batch_id=1)  # the replay
 
     rels = pipe.relations.read()
-    assert rels.filter(F.col("id") == 333928).count() == 0
-    assert len(rels.filter(F.col("id") == 3516928).collect()[0].members) == 1
+    assert rels.filter(F.col("id") == DROP_REL).count() == 0
+    assert len(rels.filter(F.col("id") == SHRINK_REL).collect()[0].members) == 1
     maintained = {
         (r.id, tuple(r.relation_ids)) for r in pipe.member_rels.read().collect()
     }
@@ -839,14 +893,14 @@ def test_crashed_batch_replay_relation_side(base, spark, tmp_path, crash_at):
 
 
 @pytest.mark.slow
-def test_way_delete_cascades_into_metadata(base, spark, tmp_path):
+def test_way_delete_cascades_into_metadata(small_region, spark, tmp_path):
     """J5 / `/root/reference/sql/ways_metadata.ddl:6` ON DELETE CASCADE,
     composed end-to-end through the .osc replication path: a
     gid-keyed ways_metadata ParquetMergeTable is registered as an FK
     child of the ways store; a changeset deleting a way must remove its
-    metadata row in the same batch, a changeset deleting a
-    metadata-less way must still commit cleanly, and replaying the
-    batch is a per-table no-op."""
+    metadata row in the same batch, deleting a metadata-less way must
+    still commit cleanly, and replaying the batch is a per-table
+    no-op."""
     from ariadne_cartograph_spark.operators.merge import ParquetMergeTable
     from ariadne_cartograph_spark.streaming.osm_replication import (
         OsmReplicationPipeline,
@@ -859,35 +913,52 @@ def test_way_delete_cascades_into_metadata(base, spark, tmp_path):
     pipe = OsmReplicationPipeline(
         spark, str(tmp_path / "repl"), derive, n_buckets=4, way_children=[meta]
     )
-    p0 = split_elements(base)
-    pipe.bootstrap(p0["nodes"], p0["ways"])
-    # the enrichment CLI's metadata table: one row per way
+    pipe.bootstrap(small_region["nodes"], small_region["ways"])
+    # the enrichment CLI's metadata table: one row per way but BARE_WAY
     meta.upsert(
-        p0["ways"].select(
+        small_region["ways"]
+        .where(F.col("id") != BARE_WAY)
+        .select(
             F.col("id").alias("gid"),
             (F.pmod(F.col("id"), F.lit(97)) / 97.0).cast("float").alias("popularity"),
         )
     )
-    n_ways0 = pipe.ways.read().count()
-    assert meta.read().count() == n_ways0
+    n_meta0 = meta.read().count()
+    assert n_meta0 == len(_SMALL_WAYS) - 1
 
-    osc = f"""<osmChange version="0.6">
-      <delete><way id="{RETAGGED_WAY}" version="2"/></delete>
-    </osmChange>"""
-    p = tmp_path / "del.osc"
-    p.write_text(osc)
-    diff = read_osc_elements(spark, str(p)).localCheckpoint(eager=True)
+    diff = _osc(
+        spark,
+        tmp_path,
+        f"""<delete><way id="{META_WAY}" version="2"/></delete>
+        <delete><way id="{BARE_WAY}" version="2"/></delete>""",
+    )
     pipe.apply_changeset(diff, batch_id=1)
 
-    # both tables consistent: way gone AND its metadata row gone
-    assert pipe.ways.read().filter(F.col("id") == RETAGGED_WAY).count() == 0
-    assert meta.read().filter(F.col("gid") == RETAGGED_WAY).count() == 0
-    assert meta.read().count() == n_ways0 - 1
+    # both tables consistent: ways gone AND the metadata row gone
+    assert {r.id for r in pipe.ways.read().collect()} == set(_SMALL_WAYS) - {META_WAY, BARE_WAY}
+    assert {r.gid for r in meta.read().collect()} == set(_SMALL_WAYS) - {META_WAY, BARE_WAY}
+    assert meta.read().count() == n_meta0 - 1
     # no orphans: every metadata gid still references a live way
     orphans = meta.read().join(
         pipe.ways.read().select(F.col("id").alias("gid")), "gid", "left_anti"
     )
     assert orphans.count() == 0
+    # the maintained index and derived table equal a from-scratch rebuild
+    maintained = {(r.id, tuple(r.way_ids)) for r in pipe.node_ways.read().collect()}
+    from_scratch = {
+        (r.id, tuple(r.way_ids))
+        for r in OsmReplicationPipeline._index_rows(
+            node_way_index(pipe.ways.read())
+        ).collect()
+    }
+    assert maintained == from_scratch
+    want = {
+        (r.id, r.n_pts)
+        for r in derive(
+            assemble_way_geometries(pipe.nodes.read(), pipe.ways.read())
+        ).collect()
+    }
+    assert {(r.id, r.n_pts) for r in pipe.derived.read().collect()} == want
 
     # replay: per-table txn marks skip everything, snapshot unchanged
     v_meta = meta._current()[0]
@@ -895,7 +966,7 @@ def test_way_delete_cascades_into_metadata(base, spark, tmp_path):
     pipe.apply_changeset(diff, batch_id=1)
     assert meta._current()[0] == v_meta
     assert pipe.ways._current()[0] == v_ways
-    assert meta.read().count() == n_ways0 - 1
+    assert meta.read().count() == n_meta0 - 1
 
 
 def test_cascade_delete_helper_orders_children_first(spark, tmp_path):
